@@ -816,10 +816,10 @@ class Collection:
                         "the fresh manifest"
                     )
             if dv_entries:
-                # merge-on-read UPDATE (update_where mode="dv"): the
-                # originals' new mask positions commit in the SAME CAS
-                # as the staged replacement rows — counts accumulate
-                # like the dv delete path (masks only grow)
+                # merge-on-read DML (_dv_commit): the new mask
+                # positions commit in the SAME CAS as any staged rows
+                # (update copies, merge inserts) — counts accumulate
+                # (masks only grow)
                 for rel, (ref, n_new) in dv_entries.items():
                     old_n = int((dv.get(rel) or {}).get("n", 0))
                     dv[rel] = {"ref": ref, "n": old_n + n_new}
@@ -1347,8 +1347,14 @@ class Collection:
         )
 
     # ------------------------------------------------------------------
-    # row-level delete / retention (beyond-reference; Delta-style
-    # DELETE re-expressed on the manifest protocol)
+    # row-level DML (beyond-reference; Delta-style DELETE / UPDATE /
+    # MERGE re-expressed on the manifest protocol). delete_where,
+    # update_where and merge_into share one kernel: a retry loop
+    # (_dml_retry) around scope (_dml_scope) → the call's own rows →
+    # one commit, merge-on-read (_dv_commit) or copy-on-write
+    # (_rewrite_commit). Each public call keeps only its rows: the kept
+    # rows for delete, the assignment select for update, the t⋈s join
+    # for merge.
     # ------------------------------------------------------------------
     def delete_where(
         self,
@@ -1363,7 +1369,7 @@ class Collection:
 
         * candidate files prune on the DRIVER via the manifest (_pb
           bucket terms derived from index predicates + the per-file
-          zonemap) before any I/O;
+          zonemap + bloom filters) before any I/O;
         * only buckets actually CONTAINING matching rows are re-read
           and rewritten — untouched buckets keep their file pointers;
         * a bucket whose every row matches is dropped from the
@@ -1403,79 +1409,14 @@ class Collection:
         (broadcast) anti-join until :meth:`compact` / any rewrite of
         the masked files materializes the mask. Returns
         ``{n_deleted, files_masked, dv_ref[, index_repairs]}``."""
-        from pystore_spark import bucketed as _bk
-
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"mode must be 'rewrite' or 'dv', got {mode!r}"
-            )
-        # the documented object-store boundary (tests/test_fs_backends):
-        # both modes run Spark jobs over the item's files — the rewrite
-        # scan, or the dv match scan + mask parquet write — which a
-        # driver-side-only backend cannot serve; fail crisply up front
-        # rather than mid-plan (and, for delete_range, before any
-        # partial metadata commit)
-        self._require_spark_fs(f"delete_where(mode={mode!r})")
-        if mode != "dv":
-            # dv deletes move NO files, so the co-location invariant
-            # survives — the one row-delete a bucketed item supports.
-            # (The mask applies inside the catalog scan via a
-            # broadcast anti-join; bucketed compaction materializes
-            # it through the bucketed writer.)
-            _bk.guard_mutation(self, item, "delete_where")
-        from pystore_spark.exceptions import ConcurrentCommitError
-        from pystore_spark.filters import filters_to_column
-        raw_pred = filters_to_column(filters)
-        if not filters or raw_pred is None:
-            # `[[]]`-style truthy-but-empty DNF also lands here —
-            # filters_to_column yields no disjuncts for it
-            raise ValueError(
-                "delete_where requires a non-empty predicate; use "
-                "delete_item to drop the whole item"
-            )
-        pred = F.coalesce(raw_pred, F.lit(False))
-        # takedown completeness: capture the matching ids BEFORE the
-        # rows vanish, one frame per export id column (distinct +
-        # materialized — the refresh anti-joins it, never collects it)
-        changed_ids: dict[str, DataFrame] = {}
-        if refresh_exports:
-            for name in self.exports_of(item):
-                em = (self.get_item_metadata(name) or {}).get(
-                    "_training_export"
-                ) or {}
-                idc = em.get("id_col")
-                if idc and idc not in changed_ids:
-                    changed_ids[idc] = (
-                        self.item(item, filters=filters, columns=[idc])
-                        .data.distinct()
-                        .localCheckpoint(eager=True)
-                    )
-        last_exc: Exception | None = None
-        out: dict | None = None
-        for attempt in range(3):
-            try:
-                if mode == "dv":
-                    out = self._delete_where_dv_once(item, filters, pred)
-                else:
-                    out = self._delete_where_once(item, filters, pred)
-                break
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        if out is None:
-            raise last_exc
-        if repair_indexes and out.get("n_deleted"):
-            out["index_repairs"] = self._repair_indexes_of(item)
-        if refresh_exports and out.get("n_deleted"):
-            er = self._refresh_exports_of(item, changed_ids)
-            out["export_refreshes"] = er
-            # prominent takedown-completeness signal (ADVICE r10): the
-            # per-export errors keep the non-failing contract, but a
-            # caller must not have to walk every nested entry to learn
-            # a GDPR takedown failed to reach an export's shards
-            out["export_refreshes_ok"] = not any(
-                "error" in r for r in er.values()
-            )
-        return out
+        self._dml_begin("delete_where", item, mode)
+        pred = self._dml_predicate(
+            "delete_where", filters, "delete_item to drop the whole item"
+        )
+        return self._dml_run(
+            item, filters, pred, mode, None, repair_indexes,
+            refresh_exports,
+        )
 
     def update_where(
         self,
@@ -1522,33 +1463,15 @@ class Collection:
         downstream training export, as in :meth:`delete_where`. No reference counterpart: the
         reference engine's only row mutation is whole-item overwrite
         (pystore/collection.py write with overwrite=True)."""
-        from pystore_spark import bucketed as _bk
-
         assignments = dict(set)  # `set=` mirrors Delta's UPDATE API
         del set  # unshadow the builtin
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"mode must be 'rewrite' or 'dv', got {mode!r}"
-            )
-        # documented object-store boundary — see delete_where
-        self._require_spark_fs(f"update_where(mode={mode!r})")
-        if mode != "dv":
-            # dv updates move no existing files and stage their
-            # copies through the BUCKETED writer (stage_copies_
-            # write_fn), so the co-location invariant survives —
-            # rewrite mode would void it
-            _bk.guard_mutation(self, item, "update_where")
-        from pystore_spark.exceptions import ConcurrentCommitError
-        from pystore_spark.filters import filters_to_column
+        self._dml_begin("update_where", item, mode)
         if not assignments:
             raise ValueError("update_where requires assignments")
-        raw_pred = filters_to_column(filters)
-        if not filters or raw_pred is None:
-            raise ValueError(
-                "update_where requires a non-empty predicate; use "
-                "write(..., overwrite=True) to replace the whole item"
-            )
-        pred = F.coalesce(raw_pred, F.lit(False))
+        pred = self._dml_predicate(
+            "update_where", filters,
+            "write(..., overwrite=True) to replace the whole item",
+        )
         it = self.item(item)
         schema = {f.name: f.dataType for f in it.data.schema.fields}
         barred = sorted(
@@ -1572,9 +1495,78 @@ class Collection:
             )
             for c, e in assignments.items()
         }
-        # capture matching ids pre-update for export refresh (ids are
-        # stable — index/bucket columns are not assignable, and a
-        # caller updating an export's id column must refresh manually)
+        return self._dml_run(
+            item, filters, pred, mode, assigns, repair_indexes,
+            refresh_exports,
+        )
+
+    def _dml_begin(self, op: str, item: str, mode: str) -> None:
+        """Entry checks shared by delete_where and update_where."""
+        from pystore_spark import bucketed as _bk
+
+        if mode not in ("rewrite", "dv"):
+            raise ValueError(
+                f"mode must be 'rewrite' or 'dv', got {mode!r}"
+            )
+        # the documented object-store boundary (tests/test_fs_backends):
+        # both modes run Spark jobs over the item's files — the rewrite
+        # scan, or the dv match scan + mask parquet write — which a
+        # driver-side-only backend cannot serve; fail crisply up front
+        # rather than mid-plan (and, for delete_range, before any
+        # partial metadata commit)
+        self._require_spark_fs(f"{op}(mode={mode!r})")
+        if mode != "dv":
+            # dv calls move NO existing files (update copies stage
+            # through the BUCKETED writer), so the co-location
+            # invariant survives — the one row mutation a bucketed item
+            # supports. (The mask applies inside the catalog scan via a
+            # broadcast anti-join; bucketed compaction materializes it
+            # through the bucketed writer.) Rewrite mode would void it.
+            _bk.guard_mutation(self, item, op)
+
+    @staticmethod
+    def _dml_predicate(op: str, filters: Sequence, hint: str) -> Column:
+        """The tuple-DNF filters as one null-safe predicate column."""
+        from pystore_spark.filters import filters_to_column
+
+        raw_pred = filters_to_column(filters)
+        if not filters or raw_pred is None:
+            # `[[]]`-style truthy-but-empty DNF also lands here —
+            # filters_to_column yields no disjuncts for it
+            raise ValueError(
+                f"{op} requires a non-empty predicate; use {hint}"
+            )
+        return F.coalesce(raw_pred, F.lit(False))
+
+    @staticmethod
+    def _dml_retry(attempt: Callable[[int], Any]) -> Any:
+        """Run ``attempt(i)`` until it commits: a lost manifest CAS
+        (``ConcurrentCommitError``) retries against fresh state, at
+        most three attempts in all; the third loss propagates."""
+        from pystore_spark.exceptions import ConcurrentCommitError
+
+        for i in range(3):
+            try:
+                return attempt(i)
+            except ConcurrentCommitError:
+                if i == 2:
+                    raise
+
+    def _dml_run(
+        self, item: str, filters: Sequence, pred: Column, mode: str,
+        assigns: dict | None, repair_indexes: bool,
+        refresh_exports: bool,
+    ) -> dict:
+        """delete_where (``assigns`` None) / update_where after their
+        entry checks: capture export ids, run the kernel attempt under
+        the retry loop, then the repair/refresh tail."""
+        n_key = "n_deleted" if assigns is None else "n_updated"
+        # takedown completeness: capture the matching ids BEFORE the
+        # rows vanish, one frame per export id column (distinct +
+        # materialized — the refresh anti-joins it, never collects it).
+        # Ids are stable under update — index/bucket columns are not
+        # assignable, and a caller updating an export's id column must
+        # refresh manually
         changed_ids: dict[str, DataFrame] = {}
         if refresh_exports:
             for name in self.exports_of(item):
@@ -1588,371 +1580,402 @@ class Collection:
                         .data.distinct()
                         .localCheckpoint(eager=True)
                     )
-        last_exc: Exception | None = None
-        out: dict | None = None
-        for attempt in range(3):
-            try:
-                if mode == "dv":
-                    out = self._update_where_dv_once(
-                        item, filters, pred, assigns
-                    )
-                else:
-                    out = self._update_where_rewrite_once(
-                        item, filters, pred, assigns
-                    )
-                break
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        if out is None:
-            raise last_exc
-        if repair_indexes and out.get("n_updated"):
+        out = self._dml_retry(
+            lambda _i: self._filter_dml(item, filters, pred, mode, assigns)
+        )
+        if repair_indexes and out.get(n_key):
             out["index_repairs"] = self._repair_indexes_of(item)
-        if refresh_exports and out.get("n_updated"):
+        if refresh_exports and out.get(n_key):
             er = self._refresh_exports_of(item, changed_ids)
             out["export_refreshes"] = er
-            # see delete_where: top-level takedown-completeness flag
+            # prominent takedown-completeness signal (ADVICE r10): the
+            # per-export errors keep the non-failing contract, but a
+            # caller must not have to walk every nested entry to learn
+            # a GDPR takedown failed to reach an export's shards
             out["export_refreshes_ok"] = not any(
                 "error" in r for r in er.values()
             )
         return out
 
-    def _update_where_dv_once(
-        self, item: str, filters: Sequence, pred, assigns: dict
+    def _filter_dml(
+        self, item: str, filters: Sequence, pred: Column, mode: str,
+        assigns: dict | None = None,
     ) -> dict:
-        """One attempt of the merge-on-read update: mask the matched
-        originals and stage their updated copies, committed together
-        by ONE manifest CAS (``_commit_staged`` scope='add' +
-        dv_entries). Files never rewrite; the commit is O(matching
-        rows) + one conditional put."""
+        """One attempt of delete_where (``assigns`` None) or
+        update_where (``assigns`` = ``{column: Column}``): scope → rows
+        → commit. Only the rows differ — delete keeps ``~pred``, update
+        evaluates every assignment against the OLD row (one
+        simultaneous select, not sequential withColumn)."""
         from pystore_spark import dv as dvm
-        from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
-        from pystore_spark.item import _prune_tuples
 
-        item_path = self._item_path(item)
+        delete = assigns is None
+        op, n_key = (
+            ("delete_where", "n_deleted")
+            if delete
+            else ("update_where", "n_updated")
+        )
         it = self.item(item)
-        man = it._manifest
-        if man is None:
-            raise StorageError(
-                f"update_where(mode='dv') requires the manifest "
-                f"protocol; item {item!r} is a legacy layout — "
-                "rewrite it first or use mode='rewrite'"
-            )
-        files = list(man.get("files") or [])
-        if not files:
-            return {"n_updated": 0, "files_masked": 0, "dv_ref": None,
-                    "files_added": 0}
-        plan = it._plan or PartitionPlan("size", npartitions=1)
-        flt = (
-            _prune_tuples(filters, plan.freq, it._index_cols)
-            if plan.kind == "time"
-            else filters
-        )
-        cand = mf.prune_files(files, flt, stats=man.get("stats"))
-        scan = dvm.masked_scan(self.spark, item_path, man, cand)
-        matched = scan.filter(pred).localCheckpoint(eager=True)
-        per_file = {
-            r["file"]: int(r["n"])
-            for r in matched.groupBy(
-                F.col("__dv_f").alias("file")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_upd = sum(per_file.values())
-        if n_upd == 0:
-            return {"n_updated": 0, "files_masked": 0, "dv_ref": None,
-                    "files_added": 0}
-        # updated copies: every assignment evaluates against the OLD
-        # row (one simultaneous select, not sequential withColumn);
-        # the regenerated layout re-derives _pb from the (immutable)
-        # index, so copies land in their original buckets
-        data_cols = [
-            c for c in matched.columns
-            if c not in ("__dv_f", "__dv_p", PARTITION_COL)
-        ]
-        upd = matched.select(
-            *[
-                assigns[c].alias(c) if c in assigns else F.col(c)
-                for c in data_cols
-            ]
-        )
-        # CHECK constraints vet the copies — the only rows this
-        # commit adds; an assignment violating a contract fails here,
-        # BEFORE the mask or any file stages (O(matched) aggregate)
-        self._enforce_constraints(item, upd)
-        from pystore_spark import bucketed as _bk
 
-        bspec = (self.get_item_metadata(item) or {}).get(
-            _bk.BUCKET_SPEC_KEY
-        )
-        if bspec:
-            # bucketed item: copies stage through the BUCKETED writer
-            # so they carry bucket tags and co-location survives
-            write_fn = _bk.stage_copies_write_fn(
-                self, upd, bspec, plan.compression
-            )
-        else:
-            shaped = apply_layout(
-                upd, plan, index_col=it._index_cols[0], small=True
-            )
-
-            def write_fn(tmp):
-                self._write_df(shaped, str(tmp), plan)
-
-        mask = matched.select(
-            F.col("__dv_f").alias("file"),
-            F.col("__dv_p").alias("pos"),
-        )
-        dv_rel, dv_entries, expect_dv = dvm.stage_union_mask(
-            self.spark, item_path, man, mask, per_file
-        )
-        before = set(files)
-        try:
-            self._commit_staged(
-                item,
-                write_fn,
-                None,  # metadata-preserving, like the delete paths
-                scope="add",
-                expect_files=mf.bucket_file_map(man),
-                dv_entries=dv_entries,
-                expect_dv=expect_dv,
-            )
-        except Exception:
-            utils.rm_tree(item_path / dv_rel)
-            raise
-        self.clear_metadata_cache(item)
-        man2 = utils.read_manifest(item_path)
-        return {
-            "n_updated": n_upd,
-            "files_masked": len(per_file),
-            "dv_ref": dv_rel,
-            "files_added": len(
-                set((man2 or {}).get("files") or []) - before
-            ),
-        }
-
-    def _update_where_rewrite_once(
-        self, item: str, filters: Sequence, pred, assigns: dict
-    ) -> dict:
-        """One attempt of the copy-on-write update: re-write every
-        bucket holding a matching row (driver-pruned candidates
-        first), carrying unmatched neighbors through unchanged. The
-        bucket swap is the same observed-state-guarded commit as
-        append/delete."""
-        from pathlib import PurePosixPath
-
-        from pystore_spark import manifest as mf
-        from pystore_spark.item import _prune_tuples
-
-        it = self.item(item)
-        man = it._manifest
-        plan = it._plan or PartitionPlan("size", npartitions=1)
-        sidecar = None  # metadata-preserving (see delete_where)
-        raw = it.raw_frame()
-        idx0 = it._index_cols[0]
-
-        def transform(df):
+        def assigned(df: DataFrame) -> DataFrame:
             return df.select(
                 *[
-                    F.when(pred, assigns[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
+                    F.when(pred, assigns[c]).otherwise(F.col(c)).alias(c)
                     if c in assigns
                     else F.col(c)
                     for c in df.columns
                 ]
             )
 
-        time_scoped = (
-            plan.kind == "time"
-            and PARTITION_COL in raw.columns
-            and man is not None
-        )
-        # CHECK constraints vet the post-update values of the matched
-        # rows (pred holds on every input row here, so the
-        # when(pred,...) branches all take the assignment)
-        self._enforce_constraints(item, transform(raw.filter(pred)))
-        if not time_scoped:
-            n_upd = raw.filter(pred).count()
-            if n_upd == 0:
-                return {"n_updated": 0, "buckets_rewritten": []}
-            shaped = apply_layout(
-                transform(raw.drop(PARTITION_COL))
-                if PARTITION_COL in raw.columns
-                else transform(raw),
-                plan, index_col=idx0, small=True,
+        if mode == "dv":
+            zero = {n_key: 0, "files_masked": 0, "dv_ref": None}
+            if not delete:
+                zero["files_added"] = 0
+            cand, _ = self._dml_scope(op, it, mode, filters=filters)
+            if not cand:
+                return zero
+            matched = dvm.masked_scan(
+                self.spark, self._item_path(item), it._manifest, cand
+            ).filter(pred)
+            appends = None
+            if not delete:
+                # mask and copies derive from ONE materialization
+                matched = matched.localCheckpoint(eager=True)
+                # the copies keep their (immutable) index, so the
+                # regenerated layout lands them in their original
+                # buckets
+                appends = assigned(matched).drop(
+                    "__dv_f", "__dv_p", PARTITION_COL
+                )
+                # CHECK constraints vet the copies — the only rows this
+                # commit adds; an assignment violating a contract fails
+                # here, BEFORE the mask or any file stages
+                self._enforce_constraints(item, appends)
+            mask = matched.select(
+                F.col("__dv_f").alias("file"),
+                F.col("__dv_p").alias("pos"),
             )
-            self._atomic_install(
-                item,
-                lambda tmp: self._write_df(shaped, str(tmp), plan),
-                sidecar,
-                expect_files=mf.bucket_file_map(man)
-                if man is not None
-                else None,
-                expect_dv=dict((man or {}).get("dv") or {}),
-            )
-            self.clear_metadata_cache(item)
-            return {"n_updated": int(n_upd), "buckets_rewritten": []}
+            if delete:
+                mask = mask.localCheckpoint(eager=True)
+            done = self._dv_commit(op, it, mask, appends)
+            if done is None:
+                return zero
+            per_file, dv_ref, files_added = done
+            out = {
+                n_key: sum(per_file.values()),
+                "files_masked": len(per_file),
+                "dv_ref": dv_ref,
+            }
+            if not delete:
+                out["files_added"] = files_added
+            return out
 
-        aug = _prune_tuples(filters, plan.freq, it._index_cols) or filters
-        cand_files = mf.prune_files(
-            man.get("files") or [], aug, stats=man.get("stats")
-        )
-        cand_files, bloom_empty = it._bloom_prune(cand_files, filters)
-        if bloom_empty:
-            return {"n_updated": 0, "buckets_rewritten": []}
-        cand_buckets = sorted(
-            {PurePosixPath(f).parent.as_posix() for f in cand_files}
-        )
-        cand_bvals = [
-            b.split("=", 1)[1] for b in cand_buckets if "=" in b
-        ]
+        zero = {n_key: 0, "buckets_rewritten": []}
+        if delete:
+            zero["buckets_dropped"] = []
+        raw = it.raw_frame()
+        if not delete:
+            # CHECK constraints vet the post-update values of the
+            # matched rows (pred holds on every input row here, so the
+            # when(pred,...) branches all take the assignment)
+            self._enforce_constraints(item, assigned(raw.filter(pred)))
+        plan = it._plan
+        if (
+            plan is None
+            or plan.kind != "time"
+            or PARTITION_COL not in raw.columns
+            or it._manifest is None
+        ):
+            # size layout / legacy: whole-item rewrite (these items
+            # are small by construction — the planner only picks the
+            # size layout under the partition target)
+            if delete:
+                rows = raw.filter(~pred).localCheckpoint(eager=True)
+                n_kept = rows.count()
+                n = raw.count() - n_kept
+            else:
+                rows, n_kept = assigned(raw), None
+                n = raw.filter(pred).count()
+            if n == 0:
+                return zero
+            self._rewrite_commit(op, it, rows, empty=n_kept == 0)
+            return {**zero, n_key: int(n)}
+
+        # ---- time layout: bucket-scoped ---------------------------
+        _, bvals = self._dml_scope(op, it, mode, filters=filters)
+        if not bvals:
+            return zero
+        # always compare the partition column AS STRING: hive column
+        # inference types yearly labels ('_pb=2023') as ints, which
+        # would break the string manifests/dir-name comparisons below
         pb_str = F.col(PARTITION_COL).cast("string")
-        subset = raw.filter(pb_str.isin(cand_bvals))
-        upd_rows = (
+        subset = raw.filter(pb_str.isin(bvals))
+        # buckets that actually hold matching rows — the rewrite
+        # scope — and the matched-row count, from ONE aggregation (no
+        # materialization of the pre-change rows: the only frame
+        # checkpointed is the one actually rewritten)
+        hits = (
             subset.filter(pred)
             .groupBy(pb_str.alias("_pbs"))
             .agg(F.count(F.lit(1)).alias("_n"))
             .collect()
         )
-        upd_bvals = sorted(r["_pbs"] for r in upd_rows)
-        n_upd = sum(r["_n"] for r in upd_rows)
-        if not upd_bvals:
-            return {"n_updated": 0, "buckets_rewritten": []}
-        rewritten = (
-            transform(subset.filter(pb_str.isin(upd_bvals)))
-            .localCheckpoint(eager=True)
+        touched = sorted(r["_pbs"] for r in hits)
+        if not touched:
+            return zero
+        scoped = subset.filter(pb_str.isin(touched))
+        if delete:
+            rows = scoped.filter(~pred).localCheckpoint(eager=True)
+            kept = {
+                r["_pbs"]
+                for r in rows.select(pb_str.alias("_pbs"))
+                .distinct()
+                .collect()
+            }
+        else:
+            rows = assigned(scoped).localCheckpoint(eager=True)
+            kept = set(touched)
+        dropped = sorted(set(touched) - kept)
+        self._rewrite_commit(
+            op, it, rows, buckets=touched, drop=dropped, empty=not kept
         )
-        shaped = apply_layout(
-            rewritten.drop(PARTITION_COL), plan, index_col=idx0,
-            small=mf.item_bytes(
-                self._item_path(item), buckets=set(upd_bvals)
-            ) <= config.PARTITION_TARGET_BYTES,
-        )
-        self._install_buckets(
-            item,
-            lambda tmp: self._write_df(shaped, str(tmp), plan),
-            sidecar,
-            expect_files=mf.bucket_file_map(man),
-            expect_dv=dict((man or {}).get("dv") or {}),
-        )
-        self.clear_metadata_cache(item)
-        return {
-            "n_updated": int(n_upd),
-            "buckets_rewritten": upd_bvals,
+        out = {
+            n_key: int(sum(r["_n"] for r in hits)),
+            "buckets_rewritten": sorted(kept),
         }
+        if delete:
+            out["buckets_dropped"] = dropped
+        return out
 
-    def _delete_where_dv_once(
-        self, item: str, filters: Sequence, pred
-    ) -> dict:
-        """One attempt of the deletion-vector delete: compute NEW
-        matches over the already-masked scan, write the union mask for
-        touched files, CAS the manifest's dv map. Files never move;
-        the commit is O(matching rows) + one conditional put."""
-        from pystore_spark import dv as dvm
+    def _dml_scope(
+        self, op: str, it: Item, mode: str,
+        filters: Sequence | None = None, src: DataFrame | None = None,
+    ) -> tuple[list[str], list[str]]:
+        """DML kernel step 2: ``(candidate live files, bucket values)``
+        a call must read. ``filters`` prune on the DRIVER exactly like
+        reads — ``_pb`` terms derived from index predicates, the
+        per-file zonemap, then the bloom pass (bloom.py), whose
+        proven-empty verdict means no row matches anywhere: an empty
+        scope, ZERO file reads. ``src`` (a merge keyed on the index)
+        scopes to the buckets its keys hash to — inserts may open
+        buckets that hold no file yet. Neither: every live file.
+        Merge-on-read needs the manifest protocol; a legacy layout is
+        refused here."""
+        from pathlib import PurePosixPath
+
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
         from pystore_spark.item import _prune_tuples
+        from pystore_spark.partition import bucket_expr
 
-        item_path = self._item_path(item)
-        it = self.item(item)
         man = it._manifest
-        if man is None:
+        if mode == "dv" and man is None:
             raise StorageError(
-                f"delete_where(mode='dv') requires the manifest "
-                f"protocol; item {item!r} is a legacy layout — "
+                f"{op}(mode='dv') requires the manifest "
+                f"protocol; item {it.item!r} is a legacy layout — "
                 "rewrite it first or use mode='rewrite'"
             )
-        files = list(man.get("files") or [])
-        if not files:
-            return {"n_deleted": 0, "files_masked": 0, "dv_ref": None}
-        # driver-side candidate pruning, same as reads: only files the
-        # predicate could touch are scanned at all
+        files = list((man or {}).get("files") or [])
+
+        def bucket_of(f: str) -> str:
+            return PurePosixPath(f).parent.as_posix()
+
         plan = it._plan
-        flt = (
-            _prune_tuples(filters, plan.freq, it._index_cols)
-            if plan is not None and plan.kind == "time"
-            else filters
-        )
-        cand = mf.prune_files(files, flt, stats=man.get("stats"))
-        scan = dvm.masked_scan(self.spark, item_path, man, cand)
-        matches = (
-            scan.filter(pred)
-            .select(
-                F.col("__dv_f").alias("file"),
-                F.col("__dv_p").alias("pos"),
+        if src is not None:
+            bvals = sorted(
+                {
+                    str(r[0])
+                    for r in src.select(
+                        bucket_expr(plan.freq, it._index_cols[0])
+                    )
+                    .distinct()
+                    .collect()
+                }
             )
-            .localCheckpoint(eager=True)
+            dirs = {f"{PARTITION_COL}={b}" for b in bvals}
+            return [f for f in files if bucket_of(f) in dirs], bvals
+        cand = files
+        if filters is not None:
+            flt = (
+                _prune_tuples(filters, plan.freq, it._index_cols)
+                or filters
+                if plan is not None and plan.kind == "time"
+                else filters
+            )
+            cand = mf.prune_files(files, flt, stats=man.get("stats"))
+            # bloom pass: a targeted delete-by-id touches only the
+            # files whose filter admits the id
+            cand, proven_empty = it._bloom_prune(cand, filters)
+            if proven_empty:
+                return [], []
+        bvals = sorted(
+            {
+                b.split("=", 1)[1]
+                for b in map(bucket_of, cand)
+                if "=" in b
+            }
         )
+        return cand, bvals
+
+    def _dv_commit(
+        self, op: str, it: Item, mask: DataFrame,
+        appends: DataFrame | None = None, n_appended: int | None = None,
+        sidecar: dict | None = None,
+    ) -> tuple[dict[str, int], str | None, int] | None:
+        """DML kernel step 3, the merge-on-read commit: ``mask`` (a
+        materialized ``file``/``pos`` frame over the masked scan) hides
+        rows, ``appends`` (updated copies and inserts, or None) adds
+        rows — both in ONE manifest CAS through
+        ``_commit_staged(scope='add')``, so readers see pre- or
+        post-change, never both copies and never neither. Files never
+        rewrite: the commit is O(changed rows) + one conditional put.
+        ``n_appended`` defaults to one row per masked row when
+        ``appends`` is given (update copies), none otherwise.
+
+        The CAS guards: ``expect_files`` — the dv map is only sound
+        against the exact live set the mask was computed from, so any
+        concurrent file movement retries; ``expect_dv`` — the TOUCHED
+        files' dv entries must be unchanged too: a concurrent dv-only
+        commit (no file movement) put positions in ITS mask dir, and
+        repointing the entry at ours would silently resurrect them.
+        ``sidecar=None`` is metadata-preserving (see
+        ``_rewrite_commit``). Returns ``(per-file masked counts,
+        dv_ref, files added)``, or None when nothing changes."""
+        from pystore_spark import bucketed as _bk
+        from pystore_spark import dv as dvm
+        from pystore_spark import manifest as mf
+
+        item = it.item
+        man = it._manifest
+        item_path = self._item_path(item)
         per_file = {
             r["file"]: int(r["n"])
-            for r in matches.groupBy("file")
+            for r in mask.groupBy("file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        n_new = sum(per_file.values())
-        if n_new == 0:
-            return {"n_deleted": 0, "files_masked": 0, "dv_ref": None}
-        unknown = [f for f in per_file if f not in set(files)]
-        if unknown:  # pragma: no cover — scan is manifest-resolved
+        n_masked = sum(per_file.values())
+        if n_appended is None:
+            n_appended = 0 if appends is None else n_masked
+        if not n_masked and not n_appended:
+            return None
+        live = set(man.get("files") or [])
+        unknown = [f for f in per_file if f not in live]
+        if unknown:  # pragma: no cover — the scan is manifest-resolved
             raise StorageError(
-                f"dv delete matched rows in non-live files {unknown}"
+                f"dv {op.split('_')[0]} matched rows in non-live files "
+                f"{unknown}"
             )
-        if it.n_rows() - n_new <= 0:
+        if n_appended < n_masked and (
+            it.n_rows() - n_masked + n_appended <= 0
+        ):
             raise StorageError(
-                f"delete_where would remove every row of {item!r}"
+                f"{op} would remove every row of {item!r}"
                 " — use delete_item"
             )
-        dv_rel, dv_entries, expect_dv = dvm.stage_union_mask(
-            self.spark, item_path, man, matches, per_file
+
+        def write_fn(tmp):
+            pass  # a pure mask commit stages no data files
+
+        if n_appended:
+            plan = it._plan or PartitionPlan("size", npartitions=1)
+            bspec = (self.get_item_metadata(item) or {}).get(
+                _bk.BUCKET_SPEC_KEY
+            )
+            if bspec:
+                # bucketed item: the appended rows stage through the
+                # BUCKETED writer so they carry bucket tags and
+                # co-location survives
+                write_fn = _bk.stage_copies_write_fn(
+                    self, appends, bspec, plan.compression
+                )
+            else:
+                shaped = apply_layout(
+                    appends, plan, index_col=it._index_cols[0],
+                    small=True,
+                )
+
+                def write_fn(tmp):
+                    self._write_df(shaped, str(tmp), plan)
+
+        dv_rel, dv_entries, expect_dv = (
+            dvm.stage_union_mask(
+                self.spark, item_path, man, mask, per_file
+            )
+            if per_file
+            else (None, None, {})
         )
-        # CAS: the dv map is only sound against the exact live set the
-        # matches were computed from — any concurrent commit retries.
-        # The TOUCHED files' dv entries must also be unchanged: a
-        # concurrent dv-only commit (no file movement) put positions
-        # in ITS mask dir, and repointing the entry at ours would
-        # silently resurrect them
-        man2, etag = utils.read_manifest_versioned(item_path)
-        if (
-            man2 is None
-            or set(man2.get("files") or []) != set(files)
-            or any(
-                dvm.dv_map(man2).get(rel) != exp
-                for rel, exp in expect_dv.items()
-            )
-        ):
-            utils.rm_tree(item_path / dv_rel)
-            raise ConcurrentCommitError(
-                f"item {item!r}: live file set or mask state changed "
-                "while the dv delete was computed; retrying against "
-                "fresh state"
-            )
-        new_map = dvm.dv_map(man2)
-        for rel, (ref, n) in dv_entries.items():
-            old_n = int((new_map.get(rel) or {}).get("n", 0))
-            new_map[rel] = {"ref": ref, "n": old_n + n}
         try:
-            utils.write_manifest(
-                item_path,
-                files,
-                dict(man2.get("metadata") or {}),
-                stale=man2.get("stale"),
-                version=int(man2.get("version", 0)) + 1,
-                stats=man2.get("stats"),
-                sizes=man2.get("sizes"),
-                dv=new_map,
-                if_match=etag,
+            self._commit_staged(
+                item, write_fn, sidecar, scope="add",
+                expect_files=mf.bucket_file_map(man),
+                dv_entries=dv_entries,
+                expect_dv=expect_dv,
             )
-        except ConcurrentCommitError:
-            utils.rm_tree(item_path / dv_rel)
+        except Exception:
+            if dv_rel:
+                utils.rm_tree(item_path / dv_rel)
             raise
         self.clear_metadata_cache(item)
-        return {
-            "n_deleted": n_new,
-            "files_masked": len(per_file),
-            "dv_ref": dv_rel,
-        }
+        if not n_appended:
+            return per_file, dv_rel, 0
+        now = (utils.read_manifest(item_path) or {}).get("files") or []
+        return per_file, dv_rel, len(set(now) - live)
+
+    def _rewrite_commit(
+        self, op: str, it: Item, rows: DataFrame,
+        buckets: list[str] | None = None, drop: Sequence[str] = (),
+        empty: bool = False, sidecar: dict | None = None,
+    ) -> None:
+        """DML kernel step 4, the copy-on-write commit: ``rows`` are
+        the rewritten rows of the touched ``buckets`` (values),
+        swapped in through ``_install_buckets`` — ``drop`` names
+        touched buckets left with no rows, whose pointers go without
+        replacement (staged buckets simply override their drop entry)
+        — or, with ``buckets=None``, of the whole item through
+        ``_atomic_install``. ``empty`` says ``rows`` holds none; that
+        is refused when no live bucket would remain (a zero-file
+        manifest poisons later reads — that intent is delete_item).
+
+        ``sidecar=None`` makes the commit metadata-PRESERVING: it
+        re-reads metadata at the commit point, because the call
+        changes only files and a stale snapshot would revert
+        concurrent streaming replay markers / ingest totals committed
+        to OTHER buckets. ``expect_files``/``expect_dv`` pin the
+        manifest the rows were computed from (see ``_commit_staged``)."""
+        from pystore_spark import manifest as mf
+
+        item = it.item
+        man = it._manifest
+        plan = it._plan or PartitionPlan("size", npartitions=1)
+        live = mf.bucket_file_map(man)
+        drop_dirs = {f"{PARTITION_COL}={b}" for b in drop}
+        if empty and (buckets is None or set(live) <= drop_dirs):
+            raise StorageError(
+                f"{op} would remove every row of {item!r}"
+                " — use delete_item"
+            )
+        shaped = apply_layout(
+            rows.drop(PARTITION_COL), plan, index_col=it._index_cols[0],
+            small=buckets is None
+            or mf.item_bytes(self._item_path(item), buckets=set(buckets))
+            <= config.PARTITION_TARGET_BYTES,
+        )
+
+        def write_fn(tmp):
+            if not empty:
+                self._write_df(shaped, str(tmp), plan)
+
+        guards = dict(
+            expect_files=live if man is not None else None,
+            expect_dv=dict((man or {}).get("dv") or {}),
+        )
+        if buckets is None:
+            self._atomic_install(item, write_fn, sidecar, **guards)
+        else:
+            self._install_buckets(
+                item, write_fn, sidecar, drop_buckets=drop_dirs or None,
+                **guards,
+            )
+        self.clear_metadata_cache(item)
 
     def _repair_indexes_of(self, item: str) -> dict[str, dict]:
         """Repair every dedup/line/vector index whose recorded corpus
@@ -1981,153 +2004,6 @@ class Collection:
                 out[n] = self.repair_index(scope or item, n)
         return out
 
-    def _delete_where_once(
-        self, item: str, filters: Sequence, pred
-    ) -> dict:
-        from pathlib import PurePosixPath
-
-        from pystore_spark import manifest as mf
-        from pystore_spark.item import _prune_tuples
-
-        it = self.item(item)
-        man = it._manifest
-        # legacy plan-less items fall back to the size layout exactly
-        # like the append path (collection.append's `or PartitionPlan`)
-        plan = it._plan or PartitionPlan("size", npartitions=1)
-        # sidecar=None → the commit re-reads metadata at the commit
-        # point (metadata-preserving): deletes change only files, and
-        # a stale snapshot here would revert concurrent streaming
-        # replay markers / ingest totals committed to OTHER buckets
-        sidecar = None
-        raw = it.raw_frame()
-        time_scoped = (
-            plan.kind == "time"
-            and PARTITION_COL in raw.columns
-            and man is not None
-        )
-        idx0 = it._index_cols[0]
-        if not time_scoped:
-            # size layout / legacy: whole-item rewrite (these items
-            # are small by construction — the planner only picks the
-            # size layout under the partition target)
-            kept = raw.filter(~pred).localCheckpoint(eager=True)
-            n_del = raw.count() - kept.count()
-            if n_del == 0:
-                return {"n_deleted": 0, "buckets_rewritten": [],
-                        "buckets_dropped": []}
-            if kept.isEmpty():
-                raise StorageError(
-                    f"delete_where would remove every row of {item!r}"
-                    " — use delete_item"
-                )
-            shaped = apply_layout(kept, plan, index_col=idx0, small=True)
-            self._atomic_install(
-                item,
-                lambda tmp: self._write_df(shaped, str(tmp), plan),
-                sidecar,
-                expect_files=mf.bucket_file_map(man)
-                if man is not None
-                else None,
-                expect_dv=dict((man or {}).get("dv") or {}),
-            )
-            self.clear_metadata_cache(item)
-            return {"n_deleted": int(n_del), "buckets_rewritten": [],
-                    "buckets_dropped": []}
-
-        # ---- time layout: bucket-scoped ---------------------------
-        aug = _prune_tuples(filters, plan.freq, it._index_cols) or filters
-        cand_files = mf.prune_files(
-            man.get("files") or [], aug, stats=man.get("stats")
-        )
-        # bloom pass (bloom.py): a targeted delete-by-id rewrites only
-        # the files whose filter admits the id; a proven-empty verdict
-        # means no row matches anywhere — the delete is a no-op with
-        # ZERO file reads
-        cand_files, bloom_empty = it._bloom_prune(cand_files, filters)
-        if bloom_empty:
-            return {"n_deleted": 0, "buckets_rewritten": [],
-                    "buckets_dropped": []}
-        cand_buckets = sorted(
-            {PurePosixPath(f).parent.as_posix() for f in cand_files}
-        )
-        cand_bvals = [
-            b.split("=", 1)[1] for b in cand_buckets if "=" in b
-        ]
-        # always compare the partition column AS STRING: hive column
-        # inference types yearly labels ('_pb=2023') as ints, which
-        # would break the string manifests/dir-name comparisons below
-        pb_str = F.col(PARTITION_COL).cast("string")
-        subset = raw.filter(pb_str.isin(cand_bvals))
-        # buckets that actually hold matching rows — the rewrite
-        # scope — and the deleted-row count, from ONE aggregation
-        # (no materialization of the pre-delete rows: the only frame
-        # checkpointed is `kept`, the rows actually rewritten)
-        del_rows = (
-            subset.filter(pred)
-            .groupBy(pb_str.alias("_pbs"))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        del_bvals = sorted(r["_pbs"] for r in del_rows)
-        n_del = sum(r["_n"] for r in del_rows)
-        if not del_bvals:
-            return {"n_deleted": 0, "buckets_rewritten": [],
-                    "buckets_dropped": []}
-        kept = (
-            subset.filter(pb_str.isin(del_bvals))
-            .filter(~pred)
-            .localCheckpoint(eager=True)
-        )
-        kept_bvals = {
-            r["_pbs"]
-            for r in kept.select(pb_str.alias("_pbs"))
-            .distinct()
-            .collect()
-        }
-        drop_dirs = {
-            f"{PARTITION_COL}={b}"
-            for b in del_bvals
-            if b not in kept_bvals
-        }
-        if not kept_bvals:
-            # every touched bucket empties — refuse to empty the ITEM
-            # (a zero-file manifest poisons later reads; that intent
-            # is delete_item)
-            all_dirs = {
-                PurePosixPath(f).parent.as_posix()
-                for f in (man.get("files") or [])
-            }
-            if not (all_dirs - drop_dirs):
-                raise StorageError(
-                    f"delete_where would remove every row of {item!r}"
-                    " — use delete_item"
-                )
-        shaped = apply_layout(
-            kept.drop(PARTITION_COL), plan, index_col=idx0,
-            small=mf.item_bytes(
-                self._item_path(item), buckets=set(del_bvals)
-            ) <= config.PARTITION_TARGET_BYTES,
-        )
-
-        def write_fn(tmp):
-            if kept_bvals:
-                self._write_df(shaped, str(tmp), plan)
-
-        self._install_buckets(
-            item, write_fn, sidecar,
-            expect_files=mf.bucket_file_map(man),
-            drop_buckets=drop_dirs or None,
-            expect_dv=dict((man or {}).get("dv") or {}),
-        )
-        self.clear_metadata_cache(item)
-        return {
-            "n_deleted": int(n_del),
-            "buckets_rewritten": sorted(kept_bvals),
-            "buckets_dropped": sorted(
-                d.split("=", 1)[1] for d in drop_dirs
-            ),
-        }
-
     def delete_range(
         self,
         item: str,
@@ -2155,7 +2031,6 @@ class Collection:
         self._require_spark_fs("delete_range")
         from pystore_spark import dv as dvm
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
         from pystore_spark.partition import bucket_value
 
         if before is None and after is None:
@@ -2186,6 +2061,61 @@ class Collection:
                 "use delete_item"
             )
 
+        def drop_whole_buckets(_attempt: int) -> tuple[list[str], int | None]:
+            """One attempt of the metadata-only phase: ``(dropped
+            bucket labels, their row count)``. The row count is
+            per-attempt: a CAS retry that finds the buckets already
+            gone (a concurrent writer won) must not report the PREVIOUS
+            attempt's footer-row sum as rows this call deleted."""
+            from pathlib import PurePosixPath
+
+            man = self.item(item)._manifest
+            # whole buckets strictly inside the deleted range: bucket
+            # labels are lexicographically time-ordered, so label <
+            # label(before) ⇒ every row < before (and symmetrically
+            # for after)
+            lo = bucket_value(plan.freq, before) if before is not None else None
+            hi = bucket_value(plan.freq, after) if after is not None else None
+            whole: set[str] = set()
+            for f in man.get("files") or []:
+                d = PurePosixPath(f).parent.as_posix()
+                if "=" not in d:
+                    continue
+                label = d.split("=", 1)[1]
+                if (lo is not None and label < lo) or (
+                    hi is not None and label > hi
+                ):
+                    whole.add(d)
+            if not whole:
+                return [], 0
+            # deleted-row accounting without reading data: sum the
+            # dropped files' parquet FOOTER row counts (O(files)
+            # driver work); None when a backend can't serve them
+            dropped_files = [
+                f
+                for f in man.get("files") or []
+                if PurePosixPath(f).parent.as_posix() in whole
+            ]
+            n_rows = self._footer_row_count(item, dropped_files)
+            if n_rows is not None:
+                # dv-masked rows in the dropped files were already
+                # deleted merge-on-read — footer counts alone would
+                # re-report them (n_rows() subtracts the same way)
+                dvmap = dvm.dv_map(man)
+                n_rows -= sum(
+                    int((dvmap.get(f) or {}).get("n", 0))
+                    for f in dropped_files
+                )
+            self._install_buckets(
+                item,
+                lambda tmp: None,  # metadata-only commit
+                None,  # metadata-preserving commit
+                expect_files=mf.bucket_file_map(man),
+                drop_buckets=whole,
+            )
+            self.clear_metadata_cache(item)
+            return sorted(d.split("=", 1)[1] for d in whole), n_rows
+
         dropped_total: list[str] = []
         n_meta_rows: int | None = 0
         if (
@@ -2193,80 +2123,7 @@ class Collection:
             and plan.kind == "time"
             and it._manifest is not None
         ):
-            from pathlib import PurePosixPath
-
-            for attempt in range(3):
-                it = self.item(item)
-                man = it._manifest
-                sidecar = None  # metadata-preserving commit
-                # per-attempt accounting: a CAS retry that finds the
-                # buckets already gone (a concurrent writer won) must
-                # not report the PREVIOUS attempt's footer-row sum as
-                # rows this call deleted
-                n_attempt_rows: int | None = 0
-                # whole buckets strictly inside the deleted range:
-                # bucket labels are lexicographically time-ordered, so
-                # label < label(before) ⇒ every row < before (and
-                # symmetrically for after)
-                lo = (
-                    bucket_value(plan.freq, before)
-                    if before is not None
-                    else None
-                )
-                hi = (
-                    bucket_value(plan.freq, after)
-                    if after is not None
-                    else None
-                )
-                whole: set[str] = set()
-                for f in man.get("files") or []:
-                    d = PurePosixPath(f).parent.as_posix()
-                    if "=" not in d:
-                        continue
-                    label = d.split("=", 1)[1]
-                    if (lo is not None and label < lo) or (
-                        hi is not None and label > hi
-                    ):
-                        whole.add(d)
-                if not whole:
-                    break
-                # deleted-row accounting without reading data: sum the
-                # dropped files' parquet FOOTER row counts (O(files)
-                # driver work); None when a backend can't serve them
-                dropped_files = [
-                    f
-                    for f in man.get("files") or []
-                    if PurePosixPath(f).parent.as_posix() in whole
-                ]
-                n_attempt_rows = self._footer_row_count(
-                    item, dropped_files
-                )
-                if n_attempt_rows is not None:
-                    # dv-masked rows in the dropped files were already
-                    # deleted merge-on-read — footer counts alone would
-                    # re-report them (n_rows() subtracts the same way)
-                    dvmap = dvm.dv_map(man)
-                    n_attempt_rows -= sum(
-                        int((dvmap.get(f) or {}).get("n", 0))
-                        for f in dropped_files
-                    )
-                try:
-                    self._install_buckets(
-                        item,
-                        lambda tmp: None,  # metadata-only commit
-                        sidecar,
-                        expect_files=mf.bucket_file_map(man),
-                        drop_buckets=whole,
-                    )
-                    dropped_total = sorted(
-                        d.split("=", 1)[1] for d in whole
-                    )
-                    n_meta_rows = n_attempt_rows
-                    self.clear_metadata_cache(item)
-                    break
-                except ConcurrentCommitError:
-                    if attempt == 2:
-                        raise
+            dropped_total, n_meta_rows = self._dml_retry(drop_whole_buckets)
         # boundary buckets (and non-time layouts): row-level pass
         rep = self.delete_where(item, filters)
         rep["buckets_dropped"] = sorted(
@@ -2384,10 +2241,6 @@ class Collection:
         # explicit transformation and are not re-scanned — documented
         # in add_constraint)
         self._enforce_constraints(item, source)
-        from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
-        from pystore_spark.partition import bucket_expr
-
         if mode not in ("rewrite", "dv"):
             raise ValueError(
                 f"mode must be 'rewrite' or 'dv', got {mode!r}"
@@ -2579,43 +2432,22 @@ class Collection:
             )
             return final, counts, n_scope_after
 
-        for attempt in range(3):
-            it = self.item(item) if attempt else it0
-            man = it._manifest
+        def attempt(i: int) -> dict:
+            it = self.item(item) if i else it0
             sidecar = utils.merge_sidecar(it.metadata, sidecar_extra)
+            # time-scoped: only the buckets holding source keys are
+            # joined (the append fast path's scope — work proportional
+            # to the touched time range; inserts may open new buckets)
+            cand, bvals = self._dml_scope(
+                "merge_into", it, mode, src=src if time_scoped else None
+            )
             if mode == "dv":
-                from pathlib import PurePosixPath as _PP
-
                 from pystore_spark import dv as dvm
 
-                if man is None:
-                    raise StorageError(
-                        f"merge_into(mode='dv') requires the manifest "
-                        f"protocol; item {item!r} is a legacy layout — "
-                        "rewrite it first or use mode='rewrite'"
-                    )
-                item_path = self._item_path(item)
-                files = list(man.get("files") or [])
-                if time_scoped:
-                    inc_pb = src.withColumn(
-                        PARTITION_COL,
-                        bucket_expr(plan.freq, idx_cols[0]),
-                    )
-                    bdirs = {
-                        f"{PARTITION_COL}={r[PARTITION_COL]}"
-                        for r in inc_pb.select(PARTITION_COL)
-                        .distinct()
-                        .collect()
-                    }
-                    cand = [
-                        f for f in files
-                        if _PP(f).parent.as_posix() in bdirs
-                    ]
-                else:
-                    cand = files
                 if cand:
                     scan = dvm.masked_scan(
-                        self.spark, item_path, man, cand
+                        self.spark, self._item_path(item), it._manifest,
+                        cand,
                     )
                 else:
                     # source keys hit only not-yet-existing buckets:
@@ -2628,183 +2460,35 @@ class Collection:
                         .withColumn("__dv_p", F.lit(None).cast("long"))
                         .limit(0)
                     )
-                if PARTITION_COL in scan.columns:
-                    scan = scan.drop(PARTITION_COL)
                 (mask, appends), counts, _ = _merged_and_counts(
-                    scan, dv=True
+                    scan.drop(PARTITION_COL), dv=True
                 )
-                if (
-                    it.n_rows()
-                    - counts["n_deleted"]
-                    + counts["n_inserted"]
-                ) <= 0:
-                    raise StorageError(
-                        f"merge_into would remove every row of "
-                        f"{item!r} — use delete_item"
-                    )
                 n_app = counts["n_updated"] + counts["n_inserted"]
-                mask = mask.localCheckpoint(eager=True)
-                per_file = {
-                    r["file"]: int(r["n"])
-                    for r in mask.groupBy("file")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                if not per_file and n_app == 0:
-                    return counts
-                unknown = [f for f in per_file if f not in set(files)]
-                if unknown:  # pragma: no cover — manifest-resolved
-                    raise StorageError(
-                        f"dv merge matched rows in non-live files "
-                        f"{unknown}"
-                    )
-                if per_file:
-                    dv_rel, dv_entries, expect_dv = (
-                        dvm.stage_union_mask(
-                            self.spark, item_path, man, mask, per_file
-                        )
-                    )
-                else:
-                    dv_rel, dv_entries, expect_dv = None, None, {}
-                bspec = (self.get_item_metadata(item) or {}).get(
-                    _bk.BUCKET_SPEC_KEY
+                self._dv_commit(
+                    "merge_into", it, mask.localCheckpoint(eager=True),
+                    appends.localCheckpoint(eager=True) if n_app else None,
+                    n_appended=n_app, sidecar=sidecar,
                 )
-                if n_app:
-                    appends = appends.localCheckpoint(eager=True)
-                    if bspec:
-                        # bucketed item: copies+inserts stage through
-                        # the BUCKETED writer — bucket tags intact,
-                        # co-location survives the merge
-                        staged_fn = _bk.stage_copies_write_fn(
-                            self, appends, bspec, plan.compression
-                        )
-                    else:
-                        shaped = apply_layout(
-                            appends, plan,
-                            index_col=idx_cols[0]
-                            if idx_cols
-                            else keys[0],
-                            small=True,
-                        )
-
-                        def staged_fn(tmp):
-                            self._write_df(shaped, str(tmp), plan)
-
-                def write_fn(tmp):
-                    if n_app:
-                        staged_fn(tmp)
-                    else:
-                        Path(tmp).mkdir(parents=True, exist_ok=True)
-
-                try:
-                    self._commit_staged(
-                        item, write_fn, sidecar, scope="add",
-                        expect_files=mf.bucket_file_map(man),
-                        dv_entries=dv_entries,
-                        expect_dv=expect_dv,
-                    )
-                except ConcurrentCommitError:
-                    if dv_rel:
-                        utils.rm_tree(item_path / dv_rel)
-                    if attempt == 2:
-                        raise
-                    continue
-                except Exception:
-                    if dv_rel:
-                        utils.rm_tree(item_path / dv_rel)
-                    raise
-                self.clear_metadata_cache(item)
                 return counts
-            raw = it.raw_frame()
+            existing = it.raw_frame()
             if time_scoped:
-                inc_pb = src.withColumn(
-                    PARTITION_COL, bucket_expr(plan.freq, idx_cols[0])
+                existing = existing.filter(
+                    F.col(PARTITION_COL).cast("string").isin(bvals)
                 )
-                buckets = [
-                    r[PARTITION_COL]
-                    for r in inc_pb.select(PARTITION_COL)
-                    .distinct()
-                    .collect()
-                ]
-                subset = raw.filter(
-                    F.col(PARTITION_COL).cast("string").isin(
-                        [str(b) for b in buckets]
-                    )
-                ).drop(PARTITION_COL)
-                final, counts, n_after = _merged_and_counts(subset)
-                live_buckets = set(
-                    mf.bucket_file_map(man) if man is not None else ()
-                )
-                if n_after == 0 and live_buckets <= {
-                    f"{PARTITION_COL}={b}" for b in buckets
-                }:
-                    # zero live files would remain: the empty-manifest
-                    # read falls back to a directory listing that can
-                    # resurface stale files — same guard as
-                    # delete_where
-                    raise StorageError(
-                        f"merge_into would remove every row of {item!r}"
-                        " — use delete_item"
-                    )
-                shaped = apply_layout(
-                    final, plan, index_col=idx_cols[0], small=True
-                )
-                try:
-                    # every candidate bucket is declared touched: one
-                    # whose rows were all deleted stages nothing and
-                    # would otherwise keep its old pointers (staged
-                    # buckets simply override their drop entry)
-                    self._install_buckets(
-                        item,
-                        lambda tmp: self._write_df(shaped, str(tmp), plan),
-                        sidecar,
-                        expect_files=mf.bucket_file_map(man)
-                        if man is not None
-                        else None,
-                        drop_buckets={
-                            f"{PARTITION_COL}={b}" for b in buckets
-                        },
-                        expect_dv=dict((man or {}).get("dv") or {}),
-                    )
-                    self.clear_metadata_cache(item)
-                    return counts
-                except ConcurrentCommitError:
-                    if attempt == 2:
-                        raise
-                    continue
-            else:
-                existing = (
-                    raw.drop(PARTITION_COL)
-                    if PARTITION_COL in raw.columns
-                    else raw
-                )
-                final, counts, n_after = _merged_and_counts(existing)
-                if n_after == 0:
-                    raise StorageError(
-                        f"merge_into would remove every row of {item!r}"
-                        " — use delete_item"
-                    )
-                shaped = apply_layout(
-                    final, plan, index_col=idx_cols[0] if idx_cols else keys[0],
-                    small=True,
-                )
-                try:
-                    self._atomic_install(
-                        item,
-                        lambda tmp: self._write_df(shaped, str(tmp), plan),
-                        sidecar,
-                        expect_files=mf.bucket_file_map(man)
-                        if man is not None
-                        else None,
-                        expect_dv=dict((man or {}).get("dv") or {}),
-                    )
-                    self.clear_metadata_cache(item)
-                    return counts
-                except ConcurrentCommitError:
-                    if attempt == 2:
-                        raise
-                    continue
-        raise StorageError(f"merge_into {item!r} exhausted retries")
+            final, counts, n_after = _merged_and_counts(
+                existing.drop(PARTITION_COL)
+            )
+            # every candidate bucket is declared dropped: one whose
+            # rows were all deleted stages nothing and would otherwise
+            # keep its old pointers
+            self._rewrite_commit(
+                "merge_into", it, final,
+                buckets=bvals if time_scoped else None, drop=bvals,
+                empty=n_after == 0, sidecar=sidecar,
+            )
+            return counts
+
+        return self._dml_retry(attempt)
 
     # ------------------------------------------------------------------
     # chunked / streaming append (reference: pystore/collection.py:677-751)

@@ -717,9 +717,10 @@ def _collect_train_rows(
     The size gate reads the Catalyst estimate of the PROJECTED frame;
     ``spark.driver.maxResultSize`` backstops an underestimate (a
     failed collect degrades to the distributed path, results
-    unchanged). ``quant`` sizes the int64-overflow bail: past
+    unchanged). ``quant`` sizes the int64-overflow bails: past
     ``~2^63 / quant`` Java's BIGINT cast saturates while numpy's
-    astype is platform-undefined, so such components keep the exact
+    astype is platform-undefined, and a cell sum that can pass 2^63
+    wraps in numpy but raises in Spark, so such inputs keep the exact
     distributed path."""
     from pystore_spark import config
     from pystore_spark.partition import estimate_size_bytes
@@ -745,6 +746,7 @@ def _collect_train_rows(
     bound = min(1e11, 9.0e18 / max(float(quant), 1.0))
     out = []
     dim = None
+    peak = 0.0
     for r in rows:
         rid, v = r[0], r[1]
         if rid is None or (
@@ -769,9 +771,15 @@ def _collect_train_rows(
                 fx = float(x)
                 if fx != fx or fx > bound or fx < -bound:
                     return None
+                peak = max(peak, abs(fx))
                 vv.append(fx)
             v = vv
         out.append((rid, v))
+    # a cell's int64 sum is bounded by max|x|·quant·rows: where that
+    # can reach 2^63, np.add.at would wrap silently while the
+    # distributed sum raises ARITHMETIC_OVERFLOW — stay distributed
+    if peak * float(quant) * len(out) >= 2.0**63:
+        return None
     try:
         out.sort(key=lambda t: t[0])
     except TypeError:

@@ -944,12 +944,11 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (
-        F.col("ts").cast("long")
-        - F.lag(F.col("ts")).over(w).cast("long")
-    )
+    # microsecond arithmetic: the oracle compares the exact interval,
+    # so a gap in (1800 s, 1801 s) must open a session too
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     new_session = F.when(
-        F.lag("ts").over(w).isNull() | (gap > 30 * 60), 1
+        F.lag("ts").over(w).isNull() | (gap > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
     wrun = (
         Window.partitionBy("user_id")

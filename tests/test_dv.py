@@ -667,6 +667,39 @@ def test_merge_into_dv_matches_rewrite(test_collection):
     pd.testing.assert_frame_equal(pa[["v", "w"]], pb[["v", "w"]])
     assert len(pa) == 20_000 - 5 + 5
 
+    # keyed on the index: the time-scoped merge joins only the
+    # source's buckets; both inserts open a bucket that has no file
+    base = _frame(12_000)  # time layout, daily buckets
+    c.write("e", base)
+    c.write("e2", base)
+    src_t = pd.DataFrame(
+        {
+            "v": [5.0, 6.0, 7.0, 3_000.0, 3_001.0, -1.0, -2.0],
+            "w": [0.5] * 7,
+            "tomb": [False, False, False, True, True, False, False],
+        },
+        index=base.index[[5, 6, 7, 3_000, 3_001]].append(
+            pd.date_range("2023-03-01", periods=2, freq="min")
+        ),
+    )
+    kw["on"] = "index"
+    man0 = utils.read_manifest(c._item_path("e"))
+    rep = c.merge_into("e", src_t, mode="dv", **kw)
+    rep2 = c.merge_into("e2", src_t, mode="rewrite", **kw)
+    assert rep == rep2 == {
+        "n_updated": 3, "n_deleted": 2, "n_inserted": 2,
+        "n_unchanged_matched": 0,
+    }
+    man1 = utils.read_manifest(c._item_path("e"))
+    assert set(man0["files"]) <= set(man1["files"])
+    assert dvm.dv_total(man1) == 5
+    pa, pb = (
+        c.item(n).data.toPandas().sort_values("v").reset_index(drop=True)
+        for n in ("e", "e2")
+    )
+    pd.testing.assert_frame_equal(pa, pb)
+    assert len(pa) == 12_000 - 2 + 2
+
 
 def test_merge_into_dv_non_index_key_avoids_item_rewrite(
     test_collection,
@@ -1441,25 +1474,41 @@ def test_datasource_mask_executor_fallback(
     assert counts() == (4_975, 0)  # executor fallback, same rows
 
 
-def test_update_where_dv_rewrite_parity_randomized(test_collection):
-    """Property-style parity: random predicates and assignments give
-    row-identical results between merge-on-read and copy-on-write."""
+@pytest.mark.parametrize("layout", ["time", "size"])
+@pytest.mark.parametrize("op", ["delete_where", "update_where"])
+def test_update_where_dv_rewrite_parity_randomized(
+    test_collection, op, layout,
+):
+    """Property-style parity: random predicates (over a column holding
+    a null) give row-identical results between merge-on-read and
+    copy-on-write, for delete and update, on both layouts (time:
+    bucket-scoped rewrite; size: whole-item rewrite)."""
     import random
 
     rng = random.Random(7)
     c = test_collection
+    n = 12_000 if layout == "time" else 5_000
     for trial in range(3):
         lo = rng.randrange(0, 4_000)
         hi = lo + rng.randrange(1, 1_500)
         mul = float(rng.randrange(2, 9))
+        null_at = rng.randrange(lo, hi)  # inside the range: never matches
         pred = [[("v", ">=", float(lo)), ("v", "<", float(hi))]]
-        assign = {"w": f"w * {mul} + v"}
+        df = _frame(n)
+        df.iloc[null_at, 0] = np.nan  # stored as a null
         a, b = f"a{trial}", f"b{trial}"
-        c.write(a, _frame(5_000))
-        c.write(b, _frame(5_000))
-        ra = c.update_where(a, pred, set=assign, mode="dv")
-        rb = c.update_where(b, pred, set=assign, mode="rewrite")
-        assert ra["n_updated"] == rb["n_updated"] == hi - lo
+        c.write(a, df)
+        c.write(b, df)
+        assert c.item(a)._plan.kind == layout
+        if op == "delete_where":
+            ra = c.delete_where(a, pred, mode="dv")
+            rb = c.delete_where(b, pred, mode="rewrite")
+        else:
+            assign = {"w": f"w * {mul} + v"}
+            ra = c.update_where(a, pred, set=assign, mode="dv")
+            rb = c.update_where(b, pred, set=assign, mode="rewrite")
+        n_key = "n_deleted" if op == "delete_where" else "n_updated"
+        assert ra[n_key] == rb[n_key] == hi - lo - 1
         pa = (
             c.item(a).data.toPandas()
             .sort_values("v").reset_index(drop=True)
@@ -1468,6 +1517,7 @@ def test_update_where_dv_rewrite_parity_randomized(test_collection):
             c.item(b).data.toPandas()
             .sort_values("v").reset_index(drop=True)
         )
+        assert pa["v"].isna().sum() == 1
         pd.testing.assert_frame_equal(pa[["v", "w"]], pb[["v", "w"]])
 
 

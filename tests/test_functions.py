@@ -1422,6 +1422,38 @@ def test_driver_local_trainer_matches_distributed(spark, monkeypatch):
     assert capped == uncapped
 
 
+def test_driver_local_trainer_refuses_cell_sum_overflow(
+    spark, monkeypatch, tmp_path
+):
+    """Components just under the 1e11 ceiling, 16 rows in one cell:
+    the cell's sum of floor(x·1e7) passes 2^63. The driver-local tier
+    must not wrap it silently in int64 — both tiers raise the
+    distributed sum's ARITHMETIC_OVERFLOW."""
+    from pystore_spark import config
+    from pystore_spark.functions import similarity as S
+
+    # a parquet scan, so the size estimate exists and the local tier
+    # would otherwise take the frame
+    spark.createDataFrame(
+        [(i, [9.9e10, 9.9e10 - i]) for i in range(16)],
+        "vec_id int, embedding array<double>",
+    ).write.parquet(str(tmp_path / "big"))
+    big = spark.read.parquet(str(tmp_path / "big"))
+    assert S._collect_train_rows(big, "embedding", "vec_id") is None
+
+    def train():
+        return S.train_ivf_centroids(
+            big, "embedding", "vec_id", n_cells=1, n_iters=1
+        )
+
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW") as local:
+        train()
+    monkeypatch.setattr(config, "KMEANS_DRIVER_TRAIN_MAX_BYTES", 0)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW") as dist:
+        train()
+    assert type(local.value) is type(dist.value)
+
+
 def test_pq_adc_inplan_lut_matches_collect(spark):
     """The r13 in-plan LUT projection (no driver collect in the ADC
     search path) must be bit-identical to the driver-side LUT build

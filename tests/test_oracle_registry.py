@@ -240,3 +240,44 @@ def test_demoted_query_matches_oracle(name, spark, duck):
     duck_pdf = duck.execute(spec.oracle_sql).df()
     problems = compare(name, spark_pdf, duck_pdf)
     assert not problems, f"{name}: {problems}"
+
+
+def test_sessionization_compares_gaps_in_microseconds(spark, tmp_path):
+    """A gap of 1800.5 s opens a session and a gap of exactly 1800 s
+    does not — the oracle's strict ``> INTERVAL 30 MINUTE``. Whole-
+    second arithmetic reads the first gap as 1800 s and merges the
+    sessions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_correctness import compare
+
+    us = 1_000_000
+    t0 = 1_704_067_200 * us  # 2024-01-01 00:00:00
+    rows = [  # (user_id, ts offset in µs)
+        (1, 0), (1, 1_800 * us + us // 2), (1, 3_600 * us + us // 2),
+        (2, 0), (2, 1_800 * us), (2, 1_800 * us + 7),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array(
+                    [t0 + off for _, off in rows], pa.timestamp("us")
+                ),
+                "user_id": pa.array([u for u, _ in rows], pa.int64()),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    spec = QUERIES["sessionization"]
+    spark_pdf = spec.spark_fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    duck_pdf = con.execute(spec.oracle_sql).df()
+    con.close()
+    assert sorted(duck_pdf["n_sessions"]) == [1, 2]  # the oracle's view
+    assert not compare("sessionization", spark_pdf, duck_pdf)
