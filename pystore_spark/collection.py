@@ -599,7 +599,6 @@ class Collection:
         from pathlib import PurePosixPath
 
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         fs = self.fs
         item_path = self._item_path(item)
@@ -834,7 +833,6 @@ class Collection:
             except OSError:
                 pass
         except Exception as exc:
-            from pystore_spark.exceptions import ConcurrentCommitError
 
             for s in staged + staged_bloom:
                 # uncommitted — never visible, safe to drop (the bloom
@@ -961,31 +959,24 @@ class Collection:
         self.recover_item(item)
 
         # sub-threshold appends: driver-side Arrow merge over only the
-        # touched buckets (see arrow_path.py). Same 3-attempt retry
-        # discipline as the Spark paths: try_append re-reads the
+        # touched buckets (see arrow_path.py). try_append re-reads the
         # manifest fresh each call, so on a lost observed-state CAS
-        # (e.g. a concurrent index-delta trim) the redo merges against
+        # (e.g. a concurrent index-delta trim) the retry merges against
         # the new state instead of crashing the caller — small appends
         # are exactly the ones landing while maintain() folds.
         from pystore_spark import arrow_path
-        from pystore_spark.exceptions import ConcurrentCommitError
 
-        for _attempt in range(3):
-            try:
-                handled = arrow_path.try_append(
-                    self, item, data, npartitions, epochdate,
-                    duplicate_handling, validate_schema,
-                    order_col=kwargs.get("order_col"),
-                    sidecar_extra=sidecar_extra,
-                )
-            except ConcurrentCommitError:
-                if _attempt == 2:
-                    raise
-                continue
-            if handled:
-                self.clear_metadata_cache(item)
-                return
-            break
+        order_col = kwargs.get("order_col")
+        handled = self._dml_retry(
+            lambda _i: arrow_path.try_append(
+                self, item, data, npartitions, epochdate,
+                duplicate_handling, validate_schema,
+                order_col=order_col, sidecar_extra=sidecar_extra,
+            )
+        )
+        if handled:
+            self.clear_metadata_cache(item)
+            return
 
         self._require_spark_fs(f"append to item {item!r} above the driver-path threshold")
         incoming, inc_meta, nrows, _ = self._prepare_input(
@@ -997,207 +988,96 @@ class Collection:
                           stacklevel=2)
             return
 
-        existing_item = self.item(item)
-        sidecar = utils.merge_sidecar(existing_item.metadata, sidecar_extra)
-        pmeta = sidecar.get(META_KEY) or inc_meta
-        idx_cols = index_columns(pmeta)
-        plan = existing_item._plan or PartitionPlan("size", npartitions=1)
-
-        existing = existing_item.raw_frame()
-
-        # schema compatibility / evolution (C6/C7;
-        # reference pystore/collection.py:568-584, :372-389)
-        evo = sidecar.get("_schema_evolution")
-        ex_cols = [c for c in existing.columns if c != PARTITION_COL]
-        if evo and evo.get("enabled"):
-            strategy = se.EvolutionStrategy(evo.get("strategy", "compatible"))
-            target = se.merged_target_schema(existing, incoming, exclude=[PARTITION_COL])
-            se.validate_evolution(
-                se.Schema.from_spark(existing, exclude=[PARTITION_COL]),
-                se.Schema.from_spark(incoming),
-                strategy,
-            )
-            existing = se.evolve_dataframe(existing.drop(PARTITION_COL), target)
-            incoming = se.evolve_dataframe(incoming, target)
-            evo["version"] = int(evo.get("version", 1)) + 1
-            sidecar["_schema_evolution"] = evo
-        elif validate_schema:
+        def attempt(_i: int) -> None:
+            """One append through the DML kernel: scope → merge_append
+            → _rewrite_commit. A retry redoes EVERYTHING against fresh
+            state — rows, the manifest guards, the schema-evolution
+            pass and the sidecar (re-committing the pre-race metadata
+            would erase what the concurrent commit wrote there, e.g.
+            streaming replay counters)."""
             from pystore_spark.merge import INPUT_ORD_COL
-
-            # the reserved stamped ordinal is merge plumbing (the
-            # dedup-ingest determinism stamp) and is exempt ONLY when
-            # the merge will actually strip it (order_col names it) —
-            # a user column that merely shares the name still raises
-            ord_exempt = (
-                kwargs.get("order_col") == INPUT_ORD_COL
-            )
-            missing = [c for c in ex_cols if c not in incoming.columns]
-            extra = [
-                c
-                for c in incoming.columns
-                if c not in ex_cols
-                and not (c == INPUT_ORD_COL and ord_exempt)
-            ]
-            if missing or extra:
-                raise ValidationError(
-                    "schema mismatch on append: "
-                    f"missing columns {missing}, unexpected columns {extra}"
-                )
-
-        order_col = kwargs.get("order_col")
-        if plan.kind == "time" and PARTITION_COL in existing.columns and not (
-            evo and evo.get("enabled")
-        ):
-            self._append_partition_scoped(
-                item, existing, incoming, idx_cols, plan, duplicate_handling,
-                sidecar, order_col=order_col, man=existing_item._manifest,
-                sidecar_extra=sidecar_extra,
-            )
-        else:
-            from pystore_spark import manifest as mf
-            from pystore_spark.exceptions import ConcurrentCommitError
             from pystore_spark.partition import estimate_size_bytes
 
-            # whole-item rewrite with the same observed-state guard as
-            # the bucket-scoped path: without it a concurrent commit's
-            # files would be moved to stale by this commit's
-            # scope='item' swap (lost update). Retries refresh BOTH
-            # the merged frame and the sidecar — re-committing the
-            # pre-race metadata would erase whatever the concurrent
-            # commit wrote there (e.g. streaming replay counters).
+            it = self.item(item)
+            sidecar = utils.merge_sidecar(it.metadata, sidecar_extra)
+            idx_cols = index_columns(sidecar.get(META_KEY) or inc_meta)
+            plan = it._plan or PartitionPlan("size", npartitions=1)
+            existing, inc = it.raw_frame(), incoming
+            # schema compatibility / evolution (C6/C7;
+            # reference pystore/collection.py:568-584, :372-389)
+            evo = sidecar.get("_schema_evolution")
             evo_on = bool(evo and evo.get("enabled"))
-            cur_existing, cur_man = existing, existing_item._manifest
-            cur_sidecar = sidecar
-            for attempt in range(3):
-                ex = (
-                    cur_existing.drop(PARTITION_COL)
-                    if PARTITION_COL in cur_existing.columns
-                    else cur_existing
+            if evo_on:
+                strategy = se.EvolutionStrategy(
+                    evo.get("strategy", "compatible")
                 )
-                merged = merge_append(ex, incoming, idx_cols,
-                                      duplicate_handling,
-                                      order_col=order_col)
+                target = se.merged_target_schema(
+                    existing, inc, exclude=[PARTITION_COL]
+                )
+                se.validate_evolution(
+                    se.Schema.from_spark(existing, exclude=[PARTITION_COL]),
+                    se.Schema.from_spark(inc),
+                    strategy,
+                )
+                existing = se.evolve_dataframe(
+                    existing.drop(PARTITION_COL), target
+                )
+                inc = se.evolve_dataframe(inc, target)
+                sidecar["_schema_evolution"] = {
+                    **evo, "version": int(evo.get("version", 1)) + 1
+                }
+            elif validate_schema:
+                ex_cols = [c for c in existing.columns if c != PARTITION_COL]
+                # the reserved stamped ordinal is merge plumbing (the
+                # dedup-ingest determinism stamp) and is exempt ONLY
+                # when the merge will actually strip it (order_col
+                # names it) — a user column that merely shares the
+                # name still raises
+                missing = [c for c in ex_cols if c not in inc.columns]
+                extra = [
+                    c
+                    for c in inc.columns
+                    if c not in ex_cols
+                    and not (c == INPUT_ORD_COL and order_col == INPUT_ORD_COL)
+                ]
+                if missing or extra:
+                    raise ValidationError(
+                        "schema mismatch on append: "
+                        f"missing columns {missing}, unexpected columns {extra}"
+                    )
+            bvals = None
+            if (
+                plan.kind == "time"
+                and PARTITION_COL in existing.columns
+                and not evo_on
+            ):
+                # the scalable append: merge and swap in only the
+                # buckets the incoming keys hash to (compared AS
+                # STRING, like merge_into — hive inference types
+                # yearly labels as ints)
+                _, bvals = self._dml_scope("append", it, "rewrite", src=inc)
+                existing = existing.filter(
+                    F.col(PARTITION_COL).cast("string").isin(bvals)
+                )
+            merged = merge_append(
+                existing.drop(PARTITION_COL), inc, idx_cols,
+                duplicate_handling, order_col=order_col,
+            )
+            new_plan = None
+            if plan.kind != "time":
                 new_plan = plan_partitions(
                     merged, index_col=idx_cols[0], npartitions=npartitions
-                ) if plan.kind != "time" else plan
+                )
                 # re-derived plans must INHERIT the item's codec — it
                 # is a lifetime setting, not a per-write one
                 new_plan.compression = plan.compression
-                inc_est = estimate_size_bytes(incoming)
-                shaped = apply_layout(
-                    merged, new_plan, index_col=idx_cols[0],
-                    small=inc_est is not None
-                    and mf.item_bytes(self._item_path(item)) + inc_est
-                    <= config.PARTITION_TARGET_BYTES,
-                )
-                cur_sidecar["_partition_plan"] = new_plan.to_dict()
-                try:
-                    self._atomic_install(
-                        item,
-                        lambda tmp: self._write_df(
-                            shaped, str(tmp), new_plan
-                        ),
-                        cur_sidecar,
-                        expect_files=mf.bucket_file_map(cur_man)
-                        if cur_man is not None
-                        else None,
-                        expect_dv=dict(
-                            (cur_man or {}).get("dv") or {}
-                        ),
-                    )
-                    break
-                except ConcurrentCommitError:
-                    # the evolved frame/sidecar were derived from the
-                    # stale state — a safe redo needs the whole
-                    # evolution pass, so propagate for the caller
-                    if evo_on or attempt == 2:
-                        raise
-                    fresh = self.item(item)
-                    cur_existing = fresh.raw_frame()
-                    cur_man = fresh._manifest
-                    cur_sidecar = utils.merge_sidecar(
-                        fresh.metadata, sidecar_extra
-                    )
-        self.clear_metadata_cache(item)
-
-    def _append_partition_scoped(
-        self,
-        item: str,
-        existing: DataFrame,
-        incoming: DataFrame,
-        idx_cols: list[str],
-        plan: PartitionPlan,
-        duplicate_handling: str,
-        sidecar: dict,
-        order_col: str | None = None,
-        man: dict | None = None,
-        sidecar_extra: dict | None = None,
-    ) -> None:
-        """Merge only the time-buckets touched by incoming keys, then
-        commit just those buckets' file pointers — the scalable append
-        path. Readers resolve through the manifest and take no lock:
-        they see the pre-append or post-append file set, never a
-        partial one (see manifest.py); crash recovery is pure GC
-        (:meth:`recover_item`).
-
-        ``man`` is the manifest ``existing`` was resolved from; its
-        per-bucket file map is handed to the commit as the
-        observed-state guard, and on ``ConcurrentCommitError`` (another
-        writer landed in a touched bucket mid-merge) the merge is
-        redone against the fresh manifest — bounded retries, then the
-        error propagates."""
-        from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
-        from pystore_spark.partition import bucket_expr, estimate_size_bytes
-
-        item_path = self._item_path(item)
-        inc = incoming.withColumn(
-            PARTITION_COL, bucket_expr(plan.freq, idx_cols[0])
-        )
-        buckets = [
-            r[PARTITION_COL]
-            for r in inc.select(PARTITION_COL).distinct().collect()
-        ]
-        for attempt in range(3):
-            subset = existing.filter(
-                F.col(PARTITION_COL).isin(buckets)
-            ).drop(PARTITION_COL)
-            merged = merge_append(
-                subset, inc.drop(PARTITION_COL), idx_cols,
-                duplicate_handling, order_col=order_col,
+                sidecar["_partition_plan"] = new_plan.to_dict()
+            self._rewrite_commit(
+                "append", it, merged, buckets=bvals, sidecar=sidecar,
+                plan=new_plan, added_bytes=estimate_size_bytes(inc),
             )
-            # merged size ≈ touched on-disk bytes + incoming estimate;
-            # under one target partition the range exchange is pure
-            # overhead
-            inc_est = estimate_size_bytes(incoming)
-            touched_bytes = mf.item_bytes(item_path, buckets=set(buckets))
-            shaped = apply_layout(
-                merged, plan, index_col=idx_cols[0],
-                small=inc_est is not None
-                and touched_bytes + inc_est <= config.PARTITION_TARGET_BYTES,
-            )
-            try:
-                self._install_buckets(
-                    item,
-                    lambda tmp: self._write_df(shaped, str(tmp), plan),
-                    sidecar,
-                    expect_files=mf.bucket_file_map(man)
-                    if man is not None
-                    else None,
-                    expect_dv=dict((man or {}).get("dv") or {}),
-                )
-                return
-            except ConcurrentCommitError:
-                if attempt == 2:
-                    raise
-                fresh_it = self.item(item)
-                existing, man = fresh_it.raw_frame(), fresh_it._manifest
-                # refresh the sidecar too: re-committing the pre-race
-                # metadata would erase what the concurrent commit
-                # wrote there (e.g. streaming replay counters)
-                sidecar = utils.merge_sidecar(
-                    fresh_it.metadata, sidecar_extra
-                )
+
+        self._dml_retry(attempt)
 
     def _install_buckets(
         self, item: str, write_fn, sidecar: dict,
@@ -1543,7 +1423,6 @@ class Collection:
         """Run ``attempt(i)`` until it commits: a lost manifest CAS
         (``ConcurrentCommitError``) retries against fresh state, at
         most three attempts in all; the third loss propagates."""
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         for i in range(3):
             try:
@@ -1755,9 +1634,10 @@ class Collection:
         reads — ``_pb`` terms derived from index predicates, the
         per-file zonemap, then the bloom pass (bloom.py), whose
         proven-empty verdict means no row matches anywhere: an empty
-        scope, ZERO file reads. ``src`` (a merge keyed on the index)
-        scopes to the buckets its keys hash to — inserts may open
-        buckets that hold no file yet. Neither: every live file.
+        scope, ZERO file reads. ``src`` (an append, or a merge keyed
+        on the index) scopes to the buckets its keys hash to — inserts
+        may open buckets that hold no file yet. Neither: every live
+        file.
         Merge-on-read needs the manifest protocol; a legacy layout is
         refused here."""
         from pathlib import PurePosixPath
@@ -1924,6 +1804,7 @@ class Collection:
         self, op: str, it: Item, rows: DataFrame,
         buckets: list[str] | None = None, drop: Sequence[str] = (),
         empty: bool = False, sidecar: dict | None = None,
+        plan: PartitionPlan | None = None, added_bytes: int | None = 0,
     ) -> None:
         """DML kernel step 4, the copy-on-write commit: ``rows`` are
         the rewritten rows of the touched ``buckets`` (values),
@@ -1934,6 +1815,13 @@ class Collection:
         ``_atomic_install``. ``empty`` says ``rows`` holds none; that
         is refused when no live bucket would remain (a zero-file
         manifest poisons later reads — that intent is delete_item).
+        ``plan`` (default: the item's) lays the rows out — append
+        passes the one it re-derives for a size layout.
+
+        The one size gate of every rewrite: the touched on-disk bytes
+        plus ``added_bytes`` (append's incoming estimate; None =
+        unknown) under one target partition write with
+        ``apply_layout(small=True)`` — no range-bounds sampling pass.
 
         ``sidecar=None`` makes the commit metadata-PRESERVING: it
         re-reads metadata at the commit point, because the call
@@ -1945,7 +1833,7 @@ class Collection:
 
         item = it.item
         man = it._manifest
-        plan = it._plan or PartitionPlan("size", npartitions=1)
+        plan = plan or it._plan or PartitionPlan("size", npartitions=1)
         live = mf.bucket_file_map(man)
         drop_dirs = {f"{PARTITION_COL}={b}" for b in drop}
         if empty and (buckets is None or set(live) <= drop_dirs):
@@ -1953,11 +1841,18 @@ class Collection:
                 f"{op} would remove every row of {item!r}"
                 " — use delete_item"
             )
+        small = (
+            added_bytes is not None
+            and mf.item_bytes(
+                self._item_path(item),
+                buckets=None if buckets is None else set(buckets),
+            )
+            + added_bytes
+            <= config.PARTITION_TARGET_BYTES
+        )
         shaped = apply_layout(
             rows.drop(PARTITION_COL), plan, index_col=it._index_cols[0],
-            small=buckets is None
-            or mf.item_bytes(self._item_path(item), buckets=set(buckets))
-            <= config.PARTITION_TARGET_BYTES,
+            small=small,
         )
 
         def write_fn(tmp):
@@ -3149,7 +3044,6 @@ class Collection:
         sidecar["_dtype_optimized"] = reported
         shaped = apply_layout(out, plan, index_col=it.index_column)
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         man = it._manifest
         try:
@@ -6579,7 +6473,6 @@ class Collection:
     def drop_constraint(self, item: str, name: str) -> dict:
         """Remove a CHECK constraint (no-op if absent). Same CAS
         metadata commit as :meth:`add_constraint`."""
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         item_path = self._item_path(item)
         for _attempt in range(3):
@@ -7154,7 +7047,6 @@ class Collection:
         sidecar["_partitions"] = plan.npartitions
         sidecar["_partition_strategy"] = strategy
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         man = it._manifest
         try:
@@ -7335,7 +7227,6 @@ class Collection:
             small=sel_bytes <= target,
         )
         sidecar = dict(it.metadata)
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         try:
             self._install_buckets(
@@ -7415,7 +7306,6 @@ class Collection:
         import base64
 
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         item_path = self._item_path(item)
         it = self.item(item)
@@ -7787,7 +7677,6 @@ class Collection:
             stats["columns"][c] = cs
 
         item_path = self._item_path(item)
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         # the version the scan actually covered (the Item handle's
         # manifest) — NOT the manifest at commit time: on a lost-CAS
@@ -7842,7 +7731,6 @@ class Collection:
         with z-order remains the way to also make the stats *tight* —
         backfill records whatever ranges the current layout has."""
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         item_path = self._item_path(item)
         if not self.fs.exists(item_path):
@@ -8123,7 +8011,6 @@ class Collection:
         plan = it._plan or PartitionPlan("size", npartitions=1)
         shaped = apply_layout(df, plan, index_col=it.index_column)
         from pystore_spark import manifest as mf
-        from pystore_spark.exceptions import ConcurrentCommitError
 
         man = it._manifest
         try:

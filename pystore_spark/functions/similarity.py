@@ -307,15 +307,9 @@ def cosine_dedup_pairs(
     )
 
 
-# the bounded pin FIFO moved to pystore_spark.partition (r13: bm25's
-# shared tokenized child pins through the same registry) — these
-# aliases keep the established names; _PIN_CACHE is the SAME list
-# object partition mutates
-from pystore_spark.partition import (  # noqa: E402
-    _PIN_CACHE,
-    _PIN_CACHE_CAP,
-    pin_frame as _pin_frame,
-)
+# the bounded pin FIFO lives in pystore_spark.partition (bm25's shared
+# tokenized child pins through the same registry)
+from pystore_spark.partition import pin_frame as _pin_frame  # noqa: E402
 
 
 def semdedup_kept(
@@ -2085,8 +2079,14 @@ def _pq_lut_frame_collect(
     """Driver-side LUT build (collect + numpy/pure-Python fold +
     createDataFrame) — the GEMM-tier path, where an in-plan
     expression would put m·n_cells folds in the plan but
-    :func:`_pq_lut` vectorizes the same sums through numpy."""
-    qrows = qa.select(id_col, vec_col, cell_col).collect()
+    :func:`_pq_lut` vectorizes the same sums through numpy. A row
+    with a null vector or cell has no LUT and is dropped, as in
+    :func:`_pq_lut_frame_inplan`."""
+    qrows = (
+        qa.filter(F.col(vec_col).isNotNull() & F.col(cell_col).isNotNull())
+        .select(id_col, vec_col, cell_col)
+        .collect()
+    )
     seen: dict = {}
     rows = []
     for r in qrows:

@@ -208,3 +208,93 @@ def test_user_column_named_ord_input_still_raises(test_collection):
     )
     with pytest.raises(ValidationError, match="_ord_input"):
         c.append("g", bad)
+
+
+@pytest.fixture()
+def spark_path_only(monkeypatch):
+    """Force every append onto the Spark path (no Arrow driver merge)."""
+    from pystore_spark import config
+
+    monkeypatch.setattr(config, "DRIVER_PATH_MAX_BYTES", 0)
+
+
+def test_schema_evolution_append_retries_lost_commit(
+    test_collection, spark_path_only
+):
+    """An evolving append that loses the manifest CAS to a concurrent
+    append redoes the whole evolution pass against the fresh state:
+    the concurrent row AND the new column both survive."""
+    c = test_collection
+    idx = pd.date_range("2024-01-01", periods=4, freq="D")
+    c.write("evo", pd.DataFrame({"v": [1.0, 2.0, 3.0, 4.0]}, index=idx))
+    c.enable_schema_evolution("evo")
+    other = pd.Timestamp("2024-02-01")
+    mine = pd.Timestamp("2024-03-01")
+
+    orig = c._write_df
+    fired = {}
+
+    def hooked(df, path, plan):
+        # first staging write of THIS append: land a concurrent append
+        if "x" not in fired:
+            fired["x"] = True
+            c.append("evo", pd.DataFrame({"v": [9.0]}, index=[other]))
+        return orig(df, path, plan)
+
+    c._write_df = hooked
+    try:
+        c.append(
+            "evo",
+            pd.DataFrame({"v": [5.0], "extra": ["new"]}, index=[mine]),
+        )
+    finally:
+        c._write_df = orig
+    got = c.item("evo").to_pandas()
+    assert set(got.index) == set(idx) | {other, mine}
+    assert got.loc[other, "v"] == 9.0
+    assert got.loc[mine, "extra"] == "new"
+    assert got["extra"].isna().sum() == 5
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches from this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"append-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_append_job_budget(spark, test_collection, spark_path_only):
+    """One keep_last Spark-path append launches a fixed number of
+    jobs: on a time-layout item that carries a dv mask (bucket scope,
+    merge, bucket swap) and on a size-layout item (merge, re-planned
+    whole-item rewrite)."""
+    c = test_collection
+    idx = pd.date_range("2024-01-01", periods=60, freq="D")
+    c.write("t", pd.DataFrame({"v": np.arange(60.0)}, index=idx), freq="M")
+    c.delete_where("t", [("v", "<", 3.0)], mode="dv")
+    assert c.item("t")._manifest.get("dv")
+    t_new = _ts_frame("2024-02-25", 10, 100.0, name="v")
+    n_time = _count_jobs(
+        spark, lambda: c.append("t", t_new, duplicate_handling="keep_last")
+    )
+
+    flat = pd.DataFrame({"k": range(20), "v": np.arange(20.0)})
+    c.write("s", flat, index_col="k")
+    assert c.item("s")._plan.kind == "size"
+    s_new = pd.DataFrame({"k": range(15, 25), "v": np.arange(10.0) + 100})
+    n_size = _count_jobs(
+        spark,
+        lambda: c.append("s", s_new, duplicate_handling="keep_last"),
+    )
+
+    assert len(c.item("t").to_pandas()) == 57 + 5
+    assert len(c.item("s").to_pandas()) == 25
+    assert (n_time, n_size) == (8, 3)

@@ -1533,6 +1533,39 @@ def test_pq_adc_inplan_lut_matches_collect(spark):
     assert out.count() > 0
 
 
+def test_pq_adc_cell_topk_tiers_drop_null_probe_rows(spark):
+    """A probe row with a null vector or a null cell has no LUT on
+    either side of GEMM_ASSIGN_MIN_CELLS: the in-plan tier (2-entry
+    codebooks) and the driver-collect tier (64 entries) drop it and
+    return the same rows. The 64-entry books extend the 2-entry ones
+    with entries no code uses, so the distances are identical."""
+    from pystore_spark.functions import similarity as S
+
+    small = [[[0.0], [1.0]], [[0.0], [1.0]]]
+    big = [cb + [[100.0 + i] for i in range(62)] for cb in small]
+    assert len(small[0]) < S.GEMM_ASSIGN_MIN_CELLS <= len(big[0])
+    codes = spark.createDataFrame(
+        [(10, 0, [0, 1]), (11, 0, [1, 1]), (12, 1, [0, 0])],
+        "vec_id int, cell int, _pq array<smallint>",
+    )
+    qa = spark.createDataFrame(
+        [(1, [0.5, 0.25], 0), (2, None, 0), (3, [1.0, 0.0], 1),
+         (4, [0.0, 0.0], None)],
+        "vec_id int, embedding array<double>, cell int",
+    )
+
+    def rows(books):
+        return sorted(
+            tuple(r) for r in S.pq_adc_cell_topk(
+                codes, qa, "embedding", "vec_id", "cell", books, k=5,
+            ).collect()
+        )
+
+    got = rows(small)
+    assert {r[0] for r in got} == {1, 3}
+    assert rows(big) == got
+
+
 def test_pq_encode_decode_and_adc_identity(spark):
     """Product quantization: codes are m smallints; the ADC distance
     (sum of per-subspace LUT entries) must equal the exact squared L2
@@ -1775,6 +1808,7 @@ def test_semdedup_pin_cache_bounded(spark):
     assignment frames without bound: the pin registry evicts past
     its cap, so a bench loop or pipeline retry cannot age the session
     with dead cached blocks (r12 optimization)."""
+    from pystore_spark import partition as P
     from pystore_spark.functions import similarity as S
     from pystore_spark.sources import load_table
 
@@ -1788,9 +1822,9 @@ def test_semdedup_pin_cache_bounded(spark):
             emb, "embedding", "vec_id", n_cells=4, n_iters=1,
             threshold=0.35,
         ).write.mode("overwrite").format("noop").save()
-    assert len(S._PIN_CACHE) <= S._PIN_CACHE_CAP
+    assert len(P._PIN_CACHE) <= P._PIN_CACHE_CAP
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after - before <= S._PIN_CACHE_CAP
+    assert after - before <= P._PIN_CACHE_CAP
 
 
 def test_semdedup_keeps_everything_below_threshold(spark):
