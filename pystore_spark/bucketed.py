@@ -371,12 +371,10 @@ def append_bucketed(
     # just re-merges its sidecar against the winner's metadata and
     # re-commits (the first attempt's staged files are invisible
     # orphans the GC sweeps).
-    from pystore_spark import utils
-    from pystore_spark.exceptions import ConcurrentCommitError
-
     from pystore_spark import manifest as mf
+    from pystore_spark import utils
 
-    for attempt in range(3):
+    def attempt(_i: int) -> None:
         sidecar = None
         expect = None
         if sidecar_extra:
@@ -390,15 +388,11 @@ def append_bucketed(
                 dict(snap.metadata or {}), sidecar_extra
             )
             expect = mf.bucket_file_map(snap._manifest or {})
-        try:
-            collection._commit_staged(
-                item, write_fn, sidecar, scope="add",
-                expect_files=expect,
-            )
-            break
-        except ConcurrentCommitError:
-            if attempt == 2:
-                raise
+        collection._commit_staged(
+            item, write_fn, sidecar, scope="add", expect_files=expect,
+        )
+
+    utils.retry_commit(attempt)
     collection.clear_metadata_cache(item)
 
 
@@ -412,12 +406,13 @@ def compact_bucketed(collection, item: str) -> dict:
     (a concurrent append retries rather than vanishing). No-op when
     every bucket already has one file."""
     from pystore_spark import manifest as mf
-    from pystore_spark.exceptions import ConcurrentCommitError
+    from pystore_spark import utils
 
     meta = collection.get_item_metadata(item) or {}
     spec = meta[BUCKET_SPEC_KEY]
     bucket_of = re.compile(r".*_(\d+)(?:\..*)?$")  # Spark's file tag
-    for _attempt in range(3):
+
+    def attempt(_i: int) -> dict:
         it = collection.item(item)
         files = (it._manifest or {}).get("files") or []
         n_before = len(files)
@@ -474,20 +469,16 @@ def compact_bucketed(collection, item: str) -> dict:
             )
             spark.sql(f"DROP TABLE IF EXISTS `{stage_tbl}`")
 
-        try:
-            # sidecar=None → metadata-preserving commit: the sidecar
-            # is re-read at the commit point, so metadata committed
-            # between our snapshot and a CAS retry (streaming replay
-            # counters, fresh stats) survives the compaction
-            collection._commit_staged(
-                item, write_fn, None, scope="item",
-                expect_files=mf.bucket_file_map(it._manifest or {}),
-                expect_dv=dict(
-                    (it._manifest or {}).get("dv") or {}
-                ),
-            )
-        except ConcurrentCommitError:
-            continue  # an append landed mid-rewrite: recompute
+        # sidecar=None → metadata-preserving commit: the sidecar is
+        # re-read at the commit point, so metadata committed between
+        # our snapshot and a CAS retry (streaming replay counters,
+        # fresh stats) survives the compaction; an append landing
+        # mid-rewrite loses the CAS and the retry recomputes
+        collection._commit_staged(
+            item, write_fn, None, scope="item",
+            expect_files=mf.bucket_file_map(it._manifest or {}),
+            expect_dv=dict((it._manifest or {}).get("dv") or {}),
+        )
         collection.clear_metadata_cache(item)
         n_after = len(
             (collection.item(item)._manifest or {}).get("files") or []
@@ -497,10 +488,8 @@ def compact_bucketed(collection, item: str) -> dict:
             "files_before": n_before,
             "files_after": n_after,
         }
-    raise ConcurrentCommitError(
-        f"bucketed compact of {item!r} lost the commit race 3 times; "
-        "serialize with appenders (CollectionLock / maintain window)"
-    )
+
+    return utils.retry_commit(attempt)
 
 
 # superseded view dirs are garbage-collected by manifest.gc_item on

@@ -967,7 +967,7 @@ class Collection:
         from pystore_spark import arrow_path
 
         order_col = kwargs.get("order_col")
-        handled = self._dml_retry(
+        handled = utils.retry_commit(
             lambda _i: arrow_path.try_append(
                 self, item, data, npartitions, epochdate,
                 duplicate_handling, validate_schema,
@@ -1077,7 +1077,7 @@ class Collection:
                 plan=new_plan, added_bytes=estimate_size_bytes(inc),
             )
 
-        self._dml_retry(attempt)
+        utils.retry_commit(attempt)
 
     def _install_buckets(
         self, item: str, write_fn, sidecar: dict,
@@ -1230,8 +1230,8 @@ class Collection:
     # row-level DML (beyond-reference; Delta-style DELETE / UPDATE /
     # MERGE re-expressed on the manifest protocol). delete_where,
     # update_where and merge_into share one kernel: a retry loop
-    # (_dml_retry) around scope (_dml_scope) → the call's own rows →
-    # one commit, merge-on-read (_dv_commit) or copy-on-write
+    # (utils.retry_commit) around scope (_dml_scope) → the call's own
+    # rows → one commit, merge-on-read (_dv_commit) or copy-on-write
     # (_rewrite_commit). Each public call keeps only its rows: the kept
     # rows for delete, the assignment select for update, the t⋈s join
     # for merge.
@@ -1418,19 +1418,6 @@ class Collection:
             )
         return F.coalesce(raw_pred, F.lit(False))
 
-    @staticmethod
-    def _dml_retry(attempt: Callable[[int], Any]) -> Any:
-        """Run ``attempt(i)`` until it commits: a lost manifest CAS
-        (``ConcurrentCommitError``) retries against fresh state, at
-        most three attempts in all; the third loss propagates."""
-
-        for i in range(3):
-            try:
-                return attempt(i)
-            except ConcurrentCommitError:
-                if i == 2:
-                    raise
-
     def _dml_run(
         self, item: str, filters: Sequence, pred: Column, mode: str,
         assigns: dict | None, repair_indexes: bool,
@@ -1459,7 +1446,7 @@ class Collection:
                         .data.distinct()
                         .localCheckpoint(eager=True)
                     )
-        out = self._dml_retry(
+        out = utils.retry_commit(
             lambda _i: self._filter_dml(item, filters, pred, mode, assigns)
         )
         if repair_indexes and out.get(n_key):
@@ -2018,7 +2005,9 @@ class Collection:
             and plan.kind == "time"
             and it._manifest is not None
         ):
-            dropped_total, n_meta_rows = self._dml_retry(drop_whole_buckets)
+            dropped_total, n_meta_rows = utils.retry_commit(
+                drop_whole_buckets
+            )
         # boundary buckets (and non-time layouts): row-level pass
         rep = self.delete_where(item, filters)
         rep["buckets_dropped"] = sorted(
@@ -2383,7 +2372,7 @@ class Collection:
             )
             return counts
 
-        return self._dml_retry(attempt)
+        return utils.retry_commit(attempt)
 
     # ------------------------------------------------------------------
     # chunked / streaming append (reference: pystore/collection.py:677-751)
@@ -2603,21 +2592,18 @@ class Collection:
                 f"GC'd; readable versions: "
                 f"{[h['version'] for h in self.history(item) if h['readable']]}"
             )
-        for _attempt in range(3):
-            man, etag = utils.read_manifest_versioned(item_path)
+        out: dict = {}
+
+        def change(man: dict | None) -> dict | None:
             if man is None:
                 raise StorageError(
                     f"item {item!r} has no manifest (legacy layout)"
                 )
-            if man.get("base"):
-                raise StorageError(
-                    f"item {item!r} is a snapshot pointer and is "
-                    "read-only"
-                )
             cur_v = int(man.get("version", 0))
+            out.clear()
             if int(version) == cur_v:
-                return {"restored_to": cur_v, "new_version": cur_v,
-                        "noop": True}
+                out.update(restored_to=cur_v, new_version=cur_v, noop=True)
+                return None
             live = set(man.get("files") or [])
             stale = dict(man.get("stale") or {})
             want = list(target.get("files") or [])
@@ -2636,33 +2622,24 @@ class Collection:
             }
             for f in live - set(want):
                 new_stale[f] = now
-            try:
-                utils.write_manifest(
-                    item_path,
-                    want,
-                    dict(target.get("metadata") or {}),
-                    stale=new_stale,
-                    version=cur_v + 1,
-                    stats=target.get("stats"),
-                    sizes=target.get("sizes"),
-                    dv=target.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                return {
-                    "restored_to": int(version),
-                    "new_version": cur_v + 1,
-                    "files_relinked": len(
-                        [f for f in want if f not in live]
-                    ),
-                    "files_retired": len(live - set(want)),
-                }
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"restore({item!r}, {version}) lost the manifest CAS 3 "
-            "times; serialize with writers and retry"
-        )
+            out.update(
+                restored_to=int(version),
+                new_version=cur_v + 1,
+                files_relinked=len([f for f in want if f not in live]),
+                files_retired=len(live - set(want)),
+            )
+            return {
+                "files": want,
+                "metadata": dict(target.get("metadata") or {}),
+                "stale": new_stale,
+                "stats": target.get("stats"),
+                "sizes": target.get("sizes"),
+                "dv": target.get("dv"),
+            }
+
+        if utils.commit_manifest_cas(item_path, change) is not None:
+            self.clear_metadata_cache(item)
+        return out
 
     def clone_item(
         self,
@@ -2924,7 +2901,6 @@ class Collection:
         deep: bool = True,
         max_categories: int = 1000,
         category_ratio: float = 0.5,
-        _retries: int = 2,
     ) -> dict[str, str]:
         """Downcast columns based on observed stats (ONE agg job), then
         rewrite the item. Returns {column: new_type}.
@@ -2938,135 +2914,136 @@ class Collection:
         reference's 70-90%% memory win targets pandas) but kept for
         parity; key columns are never downcast.
         """
-        import math
 
-        it = self.item(item)
-        df = it.data
-        idx_cols = set(index_columns(it._pandas_meta))
-        from pyspark.sql import types as T
+        def attempt(_i: int) -> dict[str, str]:
+            import math
 
-        int_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.name not in idx_cols
-            and isinstance(f.dataType, (T.LongType, T.IntegerType))
-        ]
-        flt_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.name not in idx_cols and isinstance(f.dataType, T.DoubleType)
-        ]
-        already_converted = set(
-            (it._pandas_meta.get("conversions") or {}).keys()
-        )
-        str_cols = [
-            f.name
-            for f in df.schema.fields
-            if deep
-            and f.name not in idx_cols
-            and f.name not in already_converted
-            and isinstance(f.dataType, T.StringType)
-        ]
-        if not (int_cols or flt_cols or str_cols):
-            return {}
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in int_cols + flt_cols:
-            aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-        for c in str_cols:
-            aggs.append(F.approx_count_distinct(c).alias(f"{c}__nd"))
-        row = df.agg(*aggs).first().asDict()
-        n_rows = row["__n"] or 0
+            it = self.item(item)
+            df = it.data
+            idx_cols = set(index_columns(it._pandas_meta))
+            from pyspark.sql import types as T
 
-        casts: dict[str, str] = {}
-        for c in int_cols:
-            lo, hi = row[f"{c}__min"], row[f"{c}__max"]
-            if lo is None or hi is None:
-                continue
-            if -128 <= lo and hi <= 127:
-                casts[c] = "tinyint"
-            elif -32768 <= lo and hi <= 32767:
-                casts[c] = "smallint"
-            elif -2147483648 <= lo and hi <= 2147483647 and not isinstance(
-                df.schema[c].dataType, T.IntegerType
-            ):
-                casts[c] = "int"
-        f32_max = 3.4028234663852886e38
-        for c in flt_cols:
-            lo, hi = row[f"{c}__min"], row[f"{c}__max"]
-            if lo is None or hi is None:
-                continue
-            # NaN/inf bounds fail these comparisons -> conservatively skip
-            if (
-                math.isfinite(lo)
-                and math.isfinite(hi)
-                and -f32_max < lo
-                and hi < f32_max
-            ):
-                casts[c] = "float"
-        # low-cardinality strings: storage stays string (parquet
-        # dictionary-encodes it); the win is the pandas read-back side
-        cat_cols = [
-            c
-            for c in str_cols
-            if n_rows > 0
-            and (row[f"{c}__nd"] or n_rows) <= max_categories
-            and (row[f"{c}__nd"] or n_rows) / n_rows < category_ratio
-        ]
-        if not casts and not cat_cols:
-            return {}
-
-        out = df.select(
-            *[
-                F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c)
-                for c in df.columns
+            int_cols = [
+                f.name
+                for f in df.schema.fields
+                if f.name not in idx_cols
+                and isinstance(f.dataType, (T.LongType, T.IntegerType))
             ]
-        )
-        plan = it._plan or PartitionPlan("size", npartitions=1)
-        sidecar = dict(it.metadata)
-        reported = dict(casts)
-        if cat_cols:
-            pmeta = dict(sidecar.get(META_KEY) or {})
-            conv = dict(pmeta.get("conversions") or {})
-            for c in cat_cols:
-                cats = sorted(
-                    r[0]
-                    for r in out.select(c).distinct().collect()
-                    if r[0] is not None
-                )
-                conv[c] = {
-                    "kind": "categorical",
-                    "categories": cats,
-                    "ordered": False,
-                }
-                reported[c] = "category"
-            pmeta["conversions"] = conv
-            sidecar[META_KEY] = pmeta
-        sidecar["_dtype_optimized"] = reported
-        shaped = apply_layout(out, plan, index_col=it.index_column)
-        from pystore_spark import manifest as mf
+            flt_cols = [
+                f.name
+                for f in df.schema.fields
+                if f.name not in idx_cols
+                and isinstance(f.dataType, T.DoubleType)
+            ]
+            already_converted = set(
+                (it._pandas_meta.get("conversions") or {}).keys()
+            )
+            str_cols = [
+                f.name
+                for f in df.schema.fields
+                if deep
+                and f.name not in idx_cols
+                and f.name not in already_converted
+                and isinstance(f.dataType, T.StringType)
+            ]
+            if not (int_cols or flt_cols or str_cols):
+                return {}
+            aggs = [F.count(F.lit(1)).alias("__n")]
+            for c in int_cols + flt_cols:
+                aggs += [
+                    F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")
+                ]
+            for c in str_cols:
+                aggs.append(F.approx_count_distinct(c).alias(f"{c}__nd"))
+            row = df.agg(*aggs).first().asDict()
+            n_rows = row["__n"] or 0
 
-        man = it._manifest
-        try:
-            # whole-item rewrite computed from `it`'s (masked) scan:
-            # pin the observed files AND dv map so a concurrent
-            # dv-only delete/update/merge can't be silently pruned
-            # away by write_manifest (it moves no files, so
-            # expect_files alone can't see it)
+            casts: dict[str, str] = {}
+            for c in int_cols:
+                lo, hi = row[f"{c}__min"], row[f"{c}__max"]
+                if lo is None or hi is None:
+                    continue
+                if -128 <= lo and hi <= 127:
+                    casts[c] = "tinyint"
+                elif -32768 <= lo and hi <= 32767:
+                    casts[c] = "smallint"
+                elif -2147483648 <= lo and hi <= 2147483647 and not isinstance(
+                    df.schema[c].dataType, T.IntegerType
+                ):
+                    casts[c] = "int"
+            f32_max = 3.4028234663852886e38
+            for c in flt_cols:
+                lo, hi = row[f"{c}__min"], row[f"{c}__max"]
+                if lo is None or hi is None:
+                    continue
+                # NaN/inf bounds fail these comparisons -> conservatively skip
+                if (
+                    math.isfinite(lo)
+                    and math.isfinite(hi)
+                    and -f32_max < lo
+                    and hi < f32_max
+                ):
+                    casts[c] = "float"
+            # low-cardinality strings: storage stays string (parquet
+            # dictionary-encodes it); the win is the pandas read-back side
+            cat_cols = [
+                c
+                for c in str_cols
+                if n_rows > 0
+                and (row[f"{c}__nd"] or n_rows) <= max_categories
+                and (row[f"{c}__nd"] or n_rows) / n_rows < category_ratio
+            ]
+            if not casts and not cat_cols:
+                return {}
+
+            out = df.select(
+                *[
+                    F.col(c).cast(casts[c]).alias(c)
+                    if c in casts
+                    else F.col(c)
+                    for c in df.columns
+                ]
+            )
+            plan = it._plan or PartitionPlan("size", npartitions=1)
+            sidecar = dict(it.metadata)
+            reported = dict(casts)
+            if cat_cols:
+                pmeta = dict(sidecar.get(META_KEY) or {})
+                conv = dict(pmeta.get("conversions") or {})
+                for c in cat_cols:
+                    cats = sorted(
+                        r[0]
+                        for r in out.select(c).distinct().collect()
+                        if r[0] is not None
+                    )
+                    conv[c] = {
+                        "kind": "categorical",
+                        "categories": cats,
+                        "ordered": False,
+                    }
+                    reported[c] = "category"
+                pmeta["conversions"] = conv
+                sidecar[META_KEY] = pmeta
+            sidecar["_dtype_optimized"] = reported
+            shaped = apply_layout(out, plan, index_col=it.index_column)
+            from pystore_spark import manifest as mf
+
+            man = it._manifest
+            # whole-item rewrite computed from `it`'s (masked) scan: pin
+            # the observed files AND dv map so a concurrent dv-only
+            # delete/update/merge can't be silently pruned away by
+            # write_manifest (it moves no files, so expect_files alone
+            # can't see it); a lost race recomputes from a fresh scan
             self._atomic_write(
                 item, shaped, plan, sidecar,
                 expect_files=mf.bucket_file_map(man)
                 if man is not None else None,
                 expect_dv=dict((man or {}).get("dv") or {}),
             )
-        except ConcurrentCommitError:
-            if _retries <= 0:
-                raise
-            return self.optimize_item_dtypes(
-                item, deep=deep, max_categories=max_categories,
-                category_ratio=category_ratio, _retries=_retries - 1,
-            )
-        self.clear_metadata_cache(item)
-        return reported
+            self.clear_metadata_cache(item)
+            return reported
+
+        return utils.retry_commit(attempt)
 
     # ------------------------------------------------------------------
     # snapshots (reference: pystore/collection.py:529-566;
@@ -6417,10 +6394,7 @@ class Collection:
         survive appends/compactions and travel with snapshots. An
         intentional ``write(overwrite=True)`` replaces the item AND
         its contracts — re-add after a rebuild."""
-        from pystore_spark.exceptions import (
-            ConcurrentCommitError,
-            DataIntegrityError,
-        )
+        from pystore_spark.exceptions import DataIntegrityError
 
         self._require_spark_fs("constraint management")
         it = self.item(item)
@@ -6436,74 +6410,46 @@ class Collection:
                 )
         else:
             probe.schema  # analysis only — no scan
-        item_path = self._item_path(item)
-        for _attempt in range(3):
-            man, etag = utils.read_manifest_versioned(item_path)
+
+        def change(man: dict | None) -> dict:
             if man is None:
                 raise StorageError(
                     f"item {item!r} has no manifest (legacy layout); "
                     "rewrite it before adding constraints"
                 )
             meta = dict(man.get("metadata") or {})
-            cons = dict(meta.get("_constraints") or {})
-            cons[name] = expr
-            meta["_constraints"] = cons
-            try:
-                utils.write_manifest(
-                    item_path,
-                    man.get("files") or [],
-                    meta,
-                    stale=man.get("stale"),
-                    version=int(man.get("version", 0)) + 1,
-                    stamp=False,  # a contract is not a data change
-                    stats=man.get("stats"),
-                    sizes=man.get("sizes"),
-                    dv=man.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                return dict(cons)
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"add_constraint({item!r}, {name!r}) lost the metadata "
-            "CAS 3 times; retry"
+            meta["_constraints"] = {
+                **(meta.get("_constraints") or {}), name: expr
+            }
+            return {"metadata": meta}
+
+        man = utils.commit_manifest_cas(
+            self._item_path(item), change,
+            stamp=False,  # a contract is not a data change
         )
+        self.clear_metadata_cache(item)
+        return dict(man["metadata"]["_constraints"])
 
     def drop_constraint(self, item: str, name: str) -> dict:
         """Remove a CHECK constraint (no-op if absent). Same CAS
         metadata commit as :meth:`add_constraint`."""
 
-        item_path = self._item_path(item)
-        for _attempt in range(3):
-            man, etag = utils.read_manifest_versioned(item_path)
+        def change(man: dict | None) -> dict | None:
             if man is None:
-                return {}
+                return None
             meta = dict(man.get("metadata") or {})
             cons = dict(meta.get("_constraints") or {})
             cons.pop(name, None)
             meta["_constraints"] = cons
-            try:
-                utils.write_manifest(
-                    item_path,
-                    man.get("files") or [],
-                    meta,
-                    stale=man.get("stale"),
-                    version=int(man.get("version", 0)) + 1,
-                    stamp=False,
-                    stats=man.get("stats"),
-                    sizes=man.get("sizes"),
-                    dv=man.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                return dict(cons)
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"drop_constraint({item!r}, {name!r}) lost the metadata "
-            "CAS 3 times; retry"
+            return {"metadata": meta}
+
+        man = utils.commit_manifest_cas(
+            self._item_path(item), change, stamp=False
         )
+        if man is None:
+            return {}
+        self.clear_metadata_cache(item)
+        return dict(man["metadata"]["_constraints"])
 
     def constraints(self, item: str) -> dict:
         """The item's persisted CHECK constraints, ``{name: expr}``."""
@@ -6966,7 +6912,6 @@ class Collection:
         time_based: bool = True,
         zorder: Sequence[str] | None = None,
         npartitions: int | None = None,
-        _retries: int = 2,
     ) -> int:
         """Compaction/OPTIMIZE: rewrite the item at the target layout.
         Returns the resulting partition count (files or buckets).
@@ -6978,102 +6923,104 @@ class Collection:
         files/row-groups — a linear sort only prunes its leading
         column (partition.zorder_value). The extra cost is one stats
         job + the same single shuffle the rebalance pays anyway."""
-        from pystore_spark import bucketed as _bk
 
-        _bk.guard_mutation(self, item, "rebalance_partitions")
-        it = self.item(item)
-        df = it.data
-        sidecar = dict(it.metadata)
-        idx = it.index_column
+        def attempt(_i: int) -> int:
+            from pystore_spark import bucketed as _bk
 
-        def _size_based_n() -> int:
-            size = None
-            try:
-                size = self.item_size_bytes(item)
-            except OSError:
-                pass
-            import math
+            _bk.guard_mutation(self, item, "rebalance_partitions")
+            it = self.item(item)
+            df = it.data
+            sidecar = dict(it.metadata)
+            idx = it.index_column
 
-            return max(
-                1, math.ceil((size or 0) / (target_size_mb * 1024 * 1024))
-            )
+            def _size_based_n() -> int:
+                size = None
+                try:
+                    size = self.item_size_bytes(item)
+                except OSError:
+                    pass
+                import math
 
-        if zorder:
-            from pystore_spark.partition import zorder_route, zorder_value
-
-            n = max(1, int(npartitions)) if npartitions is not None else _size_based_n()
-            plan = PartitionPlan("size", npartitions=n)
-            zv = zorder_value(df, list(zorder))
-            # deterministic equal-count routing (exact histogram +
-            # hash-preimage router) instead of repartitionByRange's
-            # sampled boundaries: layouts — and therefore pruning
-            # behavior — are reproducible across runs
-            from pystore_spark.partition import ZORDER_BITS
-
-            routed, route_col = zorder_route(
-                df.withColumn("_zv", zv), F.col("_zv"), n,
-                z_bits=ZORDER_BITS * len(zorder),
-            )
-            shaped = (
-                routed.repartition(n, F.col(route_col))
-                .sortWithinPartitions("_zv")
-                .drop("_zv", route_col)
-            )
-            strategy = "zorder"
-            sidecar["_zorder_columns"] = list(zorder)
-            # record a per-file min/max zonemap for the clustered
-            # columns at commit: filters on them then prune FILES on
-            # the driver (manifest.prune_files), before row-group
-            # skipping even starts
-            sidecar["_zonemap_columns"] = list(zorder)
-        else:
-            if npartitions is not None:
-                plan = PartitionPlan(
-                    "size", npartitions=max(1, int(npartitions))
+                return max(
+                    1, math.ceil((size or 0) / (target_size_mb * 1024 * 1024))
                 )
-            elif time_based and it._plan is not None and it._plan.kind == "time":
-                plan = it._plan
-            else:
-                plan = PartitionPlan("size", npartitions=_size_based_n())
-            shaped = apply_layout(df, plan, index_col=idx)
-            strategy = plan.kind
-            # a linear rewrite destroys any previous z-order clustering;
-            # leaving the key would claim pruning that no longer exists
-            sidecar.pop("_zorder_columns", None)
-        # a layout rewrite must not reset the item's codec
-        if plan.compression is None and it._plan is not None:
-            plan.compression = it._plan.compression
-        sidecar["_partition_plan"] = plan.to_dict()
-        sidecar["_partitions"] = plan.npartitions
-        sidecar["_partition_strategy"] = strategy
-        from pystore_spark import manifest as mf
 
-        man = it._manifest
-        try:
+            if zorder:
+                from pystore_spark.partition import zorder_route, zorder_value
+
+                n = (
+                    max(1, int(npartitions))
+                    if npartitions is not None
+                    else _size_based_n()
+                )
+                plan = PartitionPlan("size", npartitions=n)
+                zv = zorder_value(df, list(zorder))
+                # deterministic equal-count routing (exact histogram +
+                # hash-preimage router) instead of repartitionByRange's
+                # sampled boundaries: layouts — and therefore pruning
+                # behavior — are reproducible across runs
+                from pystore_spark.partition import ZORDER_BITS
+
+                routed, route_col = zorder_route(
+                    df.withColumn("_zv", zv), F.col("_zv"), n,
+                    z_bits=ZORDER_BITS * len(zorder),
+                )
+                shaped = (
+                    routed.repartition(n, F.col(route_col))
+                    .sortWithinPartitions("_zv")
+                    .drop("_zv", route_col)
+                )
+                strategy = "zorder"
+                sidecar["_zorder_columns"] = list(zorder)
+                # record a per-file min/max zonemap for the clustered
+                # columns at commit: filters on them then prune FILES on
+                # the driver (manifest.prune_files), before row-group
+                # skipping even starts
+                sidecar["_zonemap_columns"] = list(zorder)
+            else:
+                if npartitions is not None:
+                    plan = PartitionPlan(
+                        "size", npartitions=max(1, int(npartitions))
+                    )
+                elif (
+                    time_based
+                    and it._plan is not None
+                    and it._plan.kind == "time"
+                ):
+                    plan = it._plan
+                else:
+                    plan = PartitionPlan("size", npartitions=_size_based_n())
+                shaped = apply_layout(df, plan, index_col=idx)
+                strategy = plan.kind
+                # a linear rewrite destroys any previous z-order clustering;
+                # leaving the key would claim pruning that no longer exists
+                sidecar.pop("_zorder_columns", None)
+            # a layout rewrite must not reset the item's codec
+            if plan.compression is None and it._plan is not None:
+                plan.compression = it._plan.compression
+            sidecar["_partition_plan"] = plan.to_dict()
+            sidecar["_partitions"] = plan.npartitions
+            sidecar["_partition_strategy"] = strategy
+            from pystore_spark import manifest as mf
+
+            man = it._manifest
             # rewrite computed from `it`'s masked scan — pin files AND
-            # the dv map so a concurrent merge-on-read DML landing
-            # between the scan and this CAS raises (retried below)
-            # instead of its deletes being resurrected by the rewrite
+            # the dv map so a concurrent merge-on-read DML landing between
+            # the scan and this CAS raises (and recomputes) instead of its
+            # deletes being resurrected by the rewrite
             self._atomic_write(
                 item, shaped, plan, sidecar,
                 expect_files=mf.bucket_file_map(man)
                 if man is not None else None,
                 expect_dv=dict((man or {}).get("dv") or {}),
             )
-        except ConcurrentCommitError:
-            if _retries <= 0:
-                raise
-            return self.rebalance_partitions(
-                item, target_size_mb=target_size_mb,
-                time_based=time_based, zorder=zorder,
-                npartitions=npartitions, _retries=_retries - 1,
-            )
-        self.clear_metadata_cache(item)
-        return plan.npartitions
+            self.clear_metadata_cache(item)
+            return plan.npartitions
+
+        return utils.retry_commit(attempt)
 
     def compact(
-        self, item: str, target_size_mb: int | None = None,
-        _retries: int = 2,
+        self, item: str, target_size_mb: int | None = None
     ) -> dict:
         """Selective small-file compaction: rewrite ONLY the time
         buckets holding more files than their bytes need at the
@@ -7106,155 +7053,153 @@ class Collection:
             _bk.BUCKET_SPEC_KEY
         ):
             return _bk.compact_bucketed(self, item)
-        import math
 
-        from pystore_spark import manifest as mf
+        def attempt(_i: int) -> dict:
+            import math
 
-        target = (
-            target_size_mb * 1024 * 1024
-            if target_size_mb
-            else config.PARTITION_TARGET_BYTES
-        )
-        from pystore_spark import dv as dvm
+            from pystore_spark import manifest as mf
 
-        it = self.item(item)
-        man = it._manifest
-        plan = it._plan
-        files_before = len((man or {}).get("files") or [])
-        def _mask_debt(rels: list[str]) -> bool:
-            return dvm.mask_debt(self._item_path(item), man, rels)
-
-        if man is None or plan is None or plan.kind != "time":
-            # non-time items are one flat bucket — apply the same
-            # census before rewriting, so a healthy item (and every
-            # nightly maintain() pass over it) is a no-op instead of
-            # an O(item) rebalance
-            if man is not None:
-                sizes0 = man.get("sizes") or {}
-                total = sum(
-                    int(sizes0[r])
-                    if r in sizes0
-                    else mf._safe_size(self.fs, self._item_path(item) / r)
-                    for r in man.get("files") or []
-                )
-                needed = max(1, math.ceil(total / target))
-                if files_before <= needed and not _mask_debt(
-                    man.get("files") or []
-                ):
-                    return {
-                        "buckets_compacted": 0,
-                        "files_before": files_before,
-                        "files_after": files_before,
-                    }
-            n = self.rebalance_partitions(
-                item,
-                target_size_mb=max(1, target // (1024 * 1024)),
-                time_based=False,
+            target = (
+                target_size_mb * 1024 * 1024
+                if target_size_mb
+                else config.PARTITION_TARGET_BYTES
             )
-            man2 = utils.read_manifest(self._item_path(item))
+            from pystore_spark import dv as dvm
+
+            it = self.item(item)
+            man = it._manifest
+            plan = it._plan
+            files_before = len((man or {}).get("files") or [])
+            def _mask_debt(rels: list[str]) -> bool:
+                return dvm.mask_debt(self._item_path(item), man, rels)
+
+            if man is None or plan is None or plan.kind != "time":
+                # non-time items are one flat bucket — apply the same
+                # census before rewriting, so a healthy item (and every
+                # nightly maintain() pass over it) is a no-op instead of
+                # an O(item) rebalance
+                if man is not None:
+                    sizes0 = man.get("sizes") or {}
+                    total = sum(
+                        int(sizes0[r])
+                        if r in sizes0
+                        else mf._safe_size(self.fs, self._item_path(item) / r)
+                        for r in man.get("files") or []
+                    )
+                    needed = max(1, math.ceil(total / target))
+                    if files_before <= needed and not _mask_debt(
+                        man.get("files") or []
+                    ):
+                        return {
+                            "buckets_compacted": 0,
+                            "files_before": files_before,
+                            "files_after": files_before,
+                        }
+                n = self.rebalance_partitions(
+                    item,
+                    target_size_mb=max(1, target // (1024 * 1024)),
+                    time_based=False,
+                )
+                man2 = utils.read_manifest(self._item_path(item))
+                return {
+                    "buckets_compacted": 1,
+                    "files_before": files_before,
+                    "files_after": len((man2 or {}).get("files") or [])
+                    if man2
+                    else n,
+                }
+
+            item_path = self._item_path(item)
+            sizes = man.get("sizes") or {}
+            per_bucket: dict[str, list[str]] = {}
+            for rel in man.get("files") or []:
+                b = mf._bucket_of(rel)
+                if b is not None:
+                    per_bucket.setdefault(b, []).append(rel)
+
+            def _bytes(rels: list[str]) -> int:
+                return sum(
+                    int(sizes[r])
+                    if r in sizes
+                    else mf._safe_size(self.fs, item_path / r)
+                    for r in rels
+                )
+
+            selected: list[str] = []
+            needed_total = 0
+            sel_bytes = 0
+            for b, rels in per_bucket.items():
+                bb = _bytes(rels)
+                needed = max(1, math.ceil(bb / target))
+                # a bucket qualifies on the small-file census OR on mask
+                # debt: a well-sized file that is mostly dv-masked never
+                # qualifies under the size rule alone, so its anti-join
+                # cost would otherwise persist forever
+                if len(rels) > needed or _mask_debt(rels):
+                    selected.append(b)
+                    needed_total += needed
+                    sel_bytes += bb
+            if not selected:
+                return {
+                    "buckets_compacted": 0,
+                    "files_before": files_before,
+                    "files_after": files_before,
+                }
+
+            self._require_spark_fs("compaction rewrite")
+            base = mf.base_dir(item_path, man)
+            paths = [
+                str(base / r) for b in selected for r in per_bucket[b]
+            ]
+            df = it._apply_dv(
+                # deletion-vector mask (dv.py) applies BEFORE the rewrite:
+                # compaction materializes the mask into the replacement
+                # files, and the replaced files' dv entries die at commit
+                # — reading the bucket mask-blind would resurrect every
+                # masked row and silently drop the mask
+                self.spark.read.option("basePath", str(base)).parquet(
+                    *paths
+                )
+            ).drop(PARTITION_COL)
+            cplan = PartitionPlan(
+                "time", freq=plan.freq, npartitions=needed_total,
+                compression=plan.compression,
+            )
+            shaped = apply_layout(
+                df,
+                cplan,
+                index_col=it.index_column,
+                # small vs the CALLER's target, not the global default — a
+                # custom smaller target must still engage the
+                # range-partition path so a bucket can split into the
+                # needed_total files it implies
+                small=sel_bytes <= target,
+            )
+            sidecar = dict(it.metadata)
+
+            try:
+                self._install_buckets(
+                    item,
+                    lambda tmp: self._write_df(shaped, str(tmp), cplan),
+                    sidecar,
+                    # observed-state guard: the rewrite above was computed
+                    # from `man`; if an append lands in a selected bucket
+                    # before this commit, the commit must NOT move its
+                    # files to stale — detect the drift and redo the
+                    # census against the fresh manifest
+                    expect_files=mf.bucket_file_map(man),
+                    expect_dv=dict((man or {}).get("dv") or {}),
+                )
+            finally:
+                self.clear_metadata_cache(item)
+            man2 = utils.read_manifest(item_path) or {}
             return {
-                "buckets_compacted": 1,
+                "buckets_compacted": len(selected),
                 "files_before": files_before,
-                "files_after": len((man2 or {}).get("files") or [])
-                if man2
-                else n,
+                "files_after": len(man2.get("files") or []),
             }
 
-        item_path = self._item_path(item)
-        sizes = man.get("sizes") or {}
-        per_bucket: dict[str, list[str]] = {}
-        for rel in man.get("files") or []:
-            b = mf._bucket_of(rel)
-            if b is not None:
-                per_bucket.setdefault(b, []).append(rel)
-
-        def _bytes(rels: list[str]) -> int:
-            return sum(
-                int(sizes[r])
-                if r in sizes
-                else mf._safe_size(self.fs, item_path / r)
-                for r in rels
-            )
-
-        selected: list[str] = []
-        needed_total = 0
-        sel_bytes = 0
-        for b, rels in per_bucket.items():
-            bb = _bytes(rels)
-            needed = max(1, math.ceil(bb / target))
-            # a bucket qualifies on the small-file census OR on mask
-            # debt: a well-sized file that is mostly dv-masked never
-            # qualifies under the size rule alone, so its anti-join
-            # cost would otherwise persist forever
-            if len(rels) > needed or _mask_debt(rels):
-                selected.append(b)
-                needed_total += needed
-                sel_bytes += bb
-        if not selected:
-            return {
-                "buckets_compacted": 0,
-                "files_before": files_before,
-                "files_after": files_before,
-            }
-
-        self._require_spark_fs("compaction rewrite")
-        base = mf.base_dir(item_path, man)
-        paths = [
-            str(base / r) for b in selected for r in per_bucket[b]
-        ]
-        df = it._apply_dv(
-            # deletion-vector mask (dv.py) applies BEFORE the rewrite:
-            # compaction materializes the mask into the replacement
-            # files, and the replaced files' dv entries die at commit
-            # — reading the bucket mask-blind would resurrect every
-            # masked row and silently drop the mask
-            self.spark.read.option("basePath", str(base)).parquet(
-                *paths
-            )
-        ).drop(PARTITION_COL)
-        cplan = PartitionPlan(
-            "time", freq=plan.freq, npartitions=needed_total,
-            compression=plan.compression,
-        )
-        shaped = apply_layout(
-            df,
-            cplan,
-            index_col=it.index_column,
-            # small vs the CALLER's target, not the global default — a
-            # custom smaller target must still engage the
-            # range-partition path so a bucket can split into the
-            # needed_total files it implies
-            small=sel_bytes <= target,
-        )
-        sidecar = dict(it.metadata)
-
-        try:
-            self._install_buckets(
-                item,
-                lambda tmp: self._write_df(shaped, str(tmp), cplan),
-                sidecar,
-                # observed-state guard: the rewrite above was computed
-                # from `man`; if an append lands in a selected bucket
-                # before this commit, the commit must NOT move its
-                # files to stale — detect the drift and redo the
-                # census against the fresh manifest
-                expect_files=mf.bucket_file_map(man),
-                expect_dv=dict((man or {}).get("dv") or {}),
-            )
-        except ConcurrentCommitError:
-            self.clear_metadata_cache(item)
-            if _retries > 0:
-                return self.compact(
-                    item, target_size_mb, _retries=_retries - 1
-                )
-            raise
-        self.clear_metadata_cache(item)
-        man2 = utils.read_manifest(item_path) or {}
-        return {
-            "buckets_compacted": len(selected),
-            "files_before": files_before,
-            "files_after": len(man2.get("files") or []),
-        }
+        return utils.retry_commit(attempt)
 
     def analyze_incremental(
         self,
@@ -7529,10 +7474,9 @@ class Collection:
                                "n_values": sum(counts)}
             stats["histograms"] = merged_h
 
-        for _attempt in range(3):
-            man2, etag = utils.read_manifest_versioned(item_path)
-            if man2 is None or man2.get("base"):
-                break
+        def change(man2: dict | None) -> dict | None:
+            if man2 is None:
+                return None
             meta = dict(man2.get("metadata") or {})
             meta["_bucket_stats"] = {
                 "lg_k": lg_k,
@@ -7547,23 +7491,12 @@ class Collection:
             meta["_column_stats"] = dict(
                 stats, as_of_version=int(man.get("version", 0))
             )
-            try:
-                utils.write_manifest(
-                    item_path,
-                    man2.get("files") or [],
-                    meta,
-                    stale=man2.get("stale"),
-                    version=int(man2.get("version", 0)) + 1,
-                    stamp=False,
-                    stats=man2.get("stats"),
-                    sizes=man2.get("sizes"),
-                    dv=man2.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                break
-            except ConcurrentCommitError:
-                continue
+            return {"metadata": meta}
+
+        if utils.commit_manifest_cas(
+            item_path, change, stamp=False
+        ) is not None:
+            self.clear_metadata_cache(item)
         return stats
 
     def estimate_percentiles(
@@ -7683,35 +7616,21 @@ class Collection:
         # retry a concurrent append's version must not be stamped
         # onto stats that exclude its rows
         computed_version = it.version or 0
-        for _attempt in range(3):
-            man, etag = utils.read_manifest_versioned(item_path)
+
+        def change(man: dict | None) -> dict | None:
             if man is None:
-                break  # legacy item: stats still returned, not stored
-            if man.get("base"):
-                raise StorageError(
-                    f"item {item!r} is a snapshot pointer and is read-only"
-                )
+                return None  # legacy item: stats still returned, not stored
             meta = dict(man.get("metadata") or {})
             meta["_column_stats"] = dict(
                 stats, as_of_version=int(computed_version)
             )
-            try:
-                utils.write_manifest(
-                    item_path,
-                    man.get("files") or [],
-                    meta,
-                    stale=man.get("stale"),
-                    version=int(man.get("version", 0)) + 1,
-                    stamp=False,  # stats are not a data change
-                    stats=man.get("stats"),
-                    sizes=man.get("sizes"),
-                    dv=man.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                break
-            except ConcurrentCommitError:
-                continue  # a writer snuck in — stats may be stale; retry
+            return {"metadata": meta}
+
+        if utils.commit_manifest_cas(
+            item_path, change,
+            stamp=False,  # stats are not a data change
+        ) is not None:
+            self.clear_metadata_cache(item)
         return stats
 
     def set_zonemap(
@@ -7735,43 +7654,28 @@ class Collection:
         item_path = self._item_path(item)
         if not self.fs.exists(item_path):
             raise ItemNotFoundError(f"item {item!r} does not exist")
-        for _attempt in range(3):  # CAS retry: commutes with writers
-            man, etag = utils.read_manifest_versioned(item_path)
+
+        def change(man: dict | None) -> dict:
+            # re-scanned on every CAS retry: commutes with writers
             if man is None:
                 raise StorageError(
                     f"item {item!r} predates the manifest protocol; "
                     "rewrite it (rebalance_partitions) to enable zonemaps"
                 )
-            if man.get("base"):
-                raise StorageError(
-                    f"item {item!r} is a snapshot pointer and is read-only"
-                )
             meta = dict(man.get("metadata") or {})
-            files = list(man.get("files") or [])
             if columns:
                 meta["_zonemap_columns"] = list(columns)
-                stats = mf.gather_file_stats(item_path, files, list(columns))
+                stats = mf.gather_file_stats(
+                    item_path, list(man.get("files") or []), list(columns)
+                )
             else:
                 meta.pop("_zonemap_columns", None)
                 stats = {}
-            try:
-                utils.write_manifest(
-                    item_path, files, meta,
-                    stale=man.get("stale"),
-                    version=int(man.get("version", 0)) + 1,
-                    stats=stats or None,
-                    sizes=man.get("sizes"),
-                    dv=man.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                return stats
-            except ConcurrentCommitError:
-                continue  # writer snuck in — re-read and re-scan
-        raise StorageError(
-            f"set_zonemap on {item!r} kept losing the manifest CAS; "
-            "retry when the item is quiescent"
-        )
+            return {"metadata": meta, "stats": stats or None}
+
+        man = utils.commit_manifest_cas(item_path, change)
+        self.clear_metadata_cache(item)
+        return man.get("stats") or {}
 
     def audit_contamination(
         self,
@@ -7905,16 +7809,14 @@ class Collection:
         item_path = self._item_path(item)
         if not self.fs.exists(item_path):
             raise ItemNotFoundError(f"item {item!r} does not exist")
-        for _attempt in range(3):  # CAS retry: commutes with writers
-            man, etag = utils.read_manifest_versioned(item_path)
+        report: dict = {}
+
+        def change(man: dict | None) -> dict:
+            # re-backfilled on every CAS retry: commutes with writers
             if man is None:
                 raise StorageError(
                     f"item {item!r} predates the manifest protocol; "
                     "rewrite it (rebalance_partitions) to enable blooms"
-                )
-            if man.get("base"):
-                raise StorageError(
-                    f"item {item!r} is a snapshot pointer and is read-only"
                 )
             meta = dict(man.get("metadata") or {})
             files = list(man.get("files") or [])
@@ -7934,11 +7836,11 @@ class Collection:
                         item_path, self.fs, rows,
                         f"backfill-{uuid.uuid4().hex[:8]}",
                     )
-                report = {
-                    "n_files": len(files),
-                    "n_backfilled": len(missing),
-                    "columns": list(columns),
-                }
+                report.update(
+                    n_files=len(files),
+                    n_backfilled=len(missing),
+                    columns=list(columns),
+                )
             else:
                 meta.pop("_bloom_columns", None)
                 root = Path(item_path) / bl.BLOOM_DIR
@@ -7949,29 +7851,12 @@ class Collection:
                 )
                 for f in olds:
                     self.fs.delete(f, missing_ok=True)
-                report = {
-                    "n_files": len(files),
-                    "n_backfilled": 0,
-                    "columns": [],
-                }
-            try:
-                utils.write_manifest(
-                    item_path, files, meta,
-                    stale=man.get("stale"),
-                    version=int(man.get("version", 0)) + 1,
-                    stats=man.get("stats"),
-                    sizes=man.get("sizes"),
-                    dv=man.get("dv"),
-                    if_match=etag,
-                )
-                self.clear_metadata_cache(item)
-                return report
-            except ConcurrentCommitError:
-                continue  # writer snuck in — re-read and re-backfill
-        raise StorageError(
-            f"set_bloom on {item!r} kept losing the manifest CAS; "
-            "retry when the item is quiescent"
-        )
+                report.update(n_files=len(files), n_backfilled=0, columns=[])
+            return {"metadata": meta}
+
+        utils.commit_manifest_cas(item_path, change)
+        self.clear_metadata_cache(item)
+        return report
 
     # ------------------------------------------------------------------
     # schema evolution state (reference: pystore/collection.py:186-212)
@@ -7983,12 +7868,17 @@ class Collection:
             raise ItemNotFoundError(f"item {item!r} does not exist")
         if isinstance(strategy, se.EvolutionStrategy):
             strategy = strategy.value
-        meta = utils.read_metadata(self._item_path(item))
-        meta["_schema_evolution"] = {
-            "enabled": True, "strategy": strategy,
-            "version": int(meta.get("_schema_evolution", {}).get("version", 1)),
-        }
-        utils.write_metadata(self._item_path(item), meta)
+
+        def enable(meta: dict) -> dict:
+            meta["_schema_evolution"] = {
+                "enabled": True, "strategy": strategy,
+                "version": int(
+                    meta.get("_schema_evolution", {}).get("version", 1)
+                ),
+            }
+            return meta
+
+        utils.update_metadata_cas(self._item_path(item), enable)
         self.clear_metadata_cache(item)
 
     def migrate_item_to_version(
@@ -7996,24 +7886,26 @@ class Collection:
         item: str,
         version: int,
         migrations: dict[tuple[int, int], Callable] | None = None,
-        _retries: int = 2,
     ) -> None:
         """Apply registered migration functions up to ``version`` and
         rewrite the item (reference: pystore/schema_evolution.py:300-360)."""
-        it = self.item(item)
-        meta = dict(it.metadata)
-        state = meta.get("_schema_evolution") or {"enabled": True, "version": 1}
-        cur = int(state.get("version", 1))
-        df = it.data
-        df = se.run_migrations(df, cur, version, migrations or {})
-        state["version"] = version
-        meta["_schema_evolution"] = state
-        plan = it._plan or PartitionPlan("size", npartitions=1)
-        shaped = apply_layout(df, plan, index_col=it.index_column)
-        from pystore_spark import manifest as mf
 
-        man = it._manifest
-        try:
+        def attempt(_i: int) -> None:
+            it = self.item(item)
+            meta = dict(it.metadata)
+            state = meta.get("_schema_evolution") or {
+                "enabled": True, "version": 1
+            }
+            cur = int(state.get("version", 1))
+            df = it.data
+            df = se.run_migrations(df, cur, version, migrations or {})
+            state["version"] = version
+            meta["_schema_evolution"] = state
+            plan = it._plan or PartitionPlan("size", npartitions=1)
+            shaped = apply_layout(df, plan, index_col=it.index_column)
+            from pystore_spark import manifest as mf
+
+            man = it._manifest
             # pin the files + dv map the migration scan observed — a
             # concurrent dv-only commit would otherwise be pruned away
             self._atomic_write(
@@ -8022,11 +7914,6 @@ class Collection:
                 if man is not None else None,
                 expect_dv=dict((man or {}).get("dv") or {}),
             )
-        except ConcurrentCommitError:
-            if _retries <= 0:
-                raise
-            return self.migrate_item_to_version(
-                item, version, migrations=migrations,
-                _retries=_retries - 1,
-            )
-        self.clear_metadata_cache(item)
+            self.clear_metadata_cache(item)
+
+        return utils.retry_commit(attempt)

@@ -1032,7 +1032,7 @@ def trim_delta(col, delta_item: str, pinned_it, id_col: str) -> None:
     construction, CollectionLock is the documented serialization
     there)."""
     from pystore_spark import manifest as mf
-    from pystore_spark.exceptions import ConcurrentCommitError
+    from pystore_spark import utils
     from pystore_spark.partition import PartitionPlan, apply_layout
 
     if pinned_it is None or not col.item_exists(delta_item):
@@ -1071,7 +1071,7 @@ def trim_delta(col, delta_item: str, pinned_it, id_col: str) -> None:
         return
     from pystore_spark.partition import PARTITION_COL
 
-    for attempt in range(3):
+    def attempt(_i: int) -> None:
         it_cur = col.item(delta_item)
         plan = it_cur._plan or PartitionPlan("time", freq="D")
         raw = it_cur.raw_frame()
@@ -1097,24 +1097,19 @@ def trim_delta(col, delta_item: str, pinned_it, id_col: str) -> None:
             shaped = apply_layout(
                 late, plan, index_col="added_at", small=True
             )
-        try:
-            # CAS against the file set `late` was computed from: a
-            # delta commit landing mid-trim raises instead of being
-            # clobbered, and the retry recomputes against it.
-            col._atomic_install(
-                delta_item,
-                lambda tmp: col._write_df(shaped, str(tmp), plan_w),
-                sidecar,
-                expect_files=mf.bucket_file_map(it_cur._manifest),
-                expect_dv=dict(
-                    (it_cur._manifest or {}).get("dv") or {}
-                ),
-            )
-            col.clear_metadata_cache(delta_item)
-            return
-        except ConcurrentCommitError:
-            if attempt == 2:
-                raise
+        # CAS against the file set `late` was computed from: a delta
+        # commit landing mid-trim raises instead of being clobbered,
+        # and the retry recomputes against it.
+        col._atomic_install(
+            delta_item,
+            lambda tmp: col._write_df(shaped, str(tmp), plan_w),
+            sidecar,
+            expect_files=mf.bucket_file_map(it_cur._manifest),
+            expect_dv=dict((it_cur._manifest or {}).get("dv") or {}),
+        )
+
+    utils.retry_commit(attempt)
+    col.clear_metadata_cache(delta_item)
 
 
 def refresh_index(col, index_item: str) -> dict:

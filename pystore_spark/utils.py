@@ -16,9 +16,10 @@ import os
 import re
 from datetime import datetime, timezone
 from pathlib import Path
-from typing import Any
+from typing import Any, Callable
 
 from pystore_spark import fs as fslib
+from pystore_spark.exceptions import ConcurrentCommitError, StorageError
 from pystore_spark.fs import UNCONDITIONAL, fs_for
 
 METADATA_FILE = "_pystore_metadata.json"
@@ -320,21 +321,13 @@ def read_metadata(path: str | Path) -> dict[str, Any]:
 
 
 def write_metadata(path: str | Path, metadata: dict[str, Any] | None = None) -> dict[str, Any]:
-    man = read_manifest(path)
+    # metadata-only update of a manifest item: preserve the file
+    # pointers, bump the version, commit through the manifest CAS
+    man = commit_manifest_cas(
+        path, lambda m: None if m is None else {"metadata": metadata}
+    )
     if man is not None:
-        # metadata-only update of a manifest item: preserve the file
-        # pointers, bump the version, keep the commit atomic
-        return write_manifest(
-            path,
-            man.get("files") or [],
-            metadata,
-            stale=man.get("stale"),
-            base=man.get("base"),
-            version=int(man.get("version", 0)) + 1,
-            stats=man.get("stats"),
-            sizes=man.get("sizes"),
-            dv=man.get("dv"),
-        )["metadata"]
+        return man["metadata"]
     metadata = dict(metadata or {})
     metadata["_updated"] = utc_stamp()
     p = Path(path)
@@ -400,52 +393,96 @@ def validate_path_local(path: str) -> str:
     return fslib.resolve_warehouse(path)
 
 
+def retry_commit(attempt: Callable[[int], Any], attempts: int = 3) -> Any:
+    """Run ``attempt(i)`` until it commits: a lost manifest CAS
+    (``ConcurrentCommitError``) retries against fresh state, at most
+    ``attempts`` tries in all; the last loss propagates. THE retry
+    rule of every optimistic commit in the package — ``attempt`` must
+    re-read whatever state its commit is computed from."""
+    for i in range(attempts):
+        try:
+            return attempt(i)
+        except ConcurrentCommitError:
+            if i == attempts - 1:
+                raise
+
+
+# manifest fields a commit_manifest_cas change may replace; every
+# field the change does not return carries over from the read
+_MANIFEST_FIELDS = ("files", "metadata", "stale", "stats", "sizes", "dv")
+
+
+def commit_manifest_cas(
+    path: str | Path,
+    change: Callable[[dict[str, Any] | None], dict[str, Any] | None],
+    stamp: bool = True,
+    attempts: int = 3,
+) -> dict[str, Any] | None:
+    """One optimistic manifest commit that moves no data files: read
+    ``(manifest, etag)``, apply ``change(manifest)``, install version
+    + 1 with ``if_match=etag``; a lost race re-reads and re-runs
+    ``change`` under :func:`retry_commit`, so a commit landing in
+    between is never dropped.
+
+    ``change`` gets the fresh manifest (None for a manifest-less
+    item) and returns the fields it replaces (see
+    ``_MANIFEST_FIELDS``) or None to commit nothing. A snapshot
+    pointer is read-only and refused before ``change`` runs. Returns
+    the installed manifest, or None when nothing was committed."""
+
+    def attempt(_i: int) -> dict[str, Any] | None:
+        man, etag = read_manifest_versioned(path)
+        if man is not None and man.get("base"):
+            raise StorageError(
+                f"item {Path(path).name!r} is a snapshot pointer and is "
+                "read-only"
+            )
+        fields = change(man)
+        if fields is None:
+            return None
+        new = {k: man.get(k) for k in _MANIFEST_FIELDS}
+        new.update(fields)
+        return write_manifest(
+            path,
+            new["files"] or [],
+            new["metadata"],
+            stale=new["stale"],
+            version=int(man.get("version", 0)) + 1,
+            stamp=stamp,
+            stats=new["stats"],
+            sizes=new["sizes"],
+            dv=new["dv"],
+            if_match=etag,
+        )
+
+    return retry_commit(attempt, attempts)
+
+
 def update_metadata_cas(
     path: str | Path,
     update_fn,
     retries: int = 5,
 ) -> dict[str, Any]:
-    """Metadata-only read-modify-write through the manifest CAS:
-    read ``(manifest, etag)``, apply ``update_fn(metadata) -> metadata``,
-    install with ``if_match=etag``, retry on a lost race with FRESH
-    state. This is the safe form of :func:`write_metadata` for hot
-    concurrent paths (ingest stamps, counters): a data commit landing
-    between the read and the install fails the conditional put — so
-    the retry re-reads the new file list instead of silently dropping
-    the concurrent commit's files from the live manifest — and counter
-    accumulations recompute from the fresh metadata instead of
-    double-reading a stale base (no lost updates).
+    """Metadata-only read-modify-write through the manifest CAS
+    (:func:`commit_manifest_cas`): apply ``update_fn(metadata) ->
+    metadata`` to the fresh manifest's metadata, retrying a lost race
+    with FRESH state. This is the form of :func:`write_metadata` for
+    hot concurrent paths (ingest stamps, counters): a data commit
+    landing between the read and the install fails the conditional
+    put — so the retry re-reads the new file list instead of silently
+    dropping the concurrent commit's files from the live manifest —
+    and counter accumulations recompute from the fresh metadata
+    instead of double-reading a stale base (no lost updates).
 
     Legacy (manifest-less) items fall back to a plain sidecar write;
     there are no file pointers to clobber there."""
-    from pystore_spark.exceptions import (
-        ConcurrentCommitError,
-        StorageError,
+    man = commit_manifest_cas(
+        path,
+        lambda m: None
+        if m is None
+        else {"metadata": update_fn(dict(m.get("metadata") or {}))},
+        attempts=max(1, retries),
     )
-
-    last: Exception | None = None
-    for _ in range(max(1, retries)):
-        man, etag = read_manifest_versioned(path)
-        if man is None:
-            meta = update_fn(dict(read_metadata(path) or {}))
-            return write_metadata(path, meta)
-        try:
-            return write_manifest(
-                path,
-                man.get("files") or [],
-                update_fn(dict(man.get("metadata") or {})),
-                stale=man.get("stale"),
-                base=man.get("base"),
-                version=int(man.get("version", 0)) + 1,
-                stats=man.get("stats"),
-                sizes=man.get("sizes"),
-                dv=man.get("dv"),
-                if_match=etag,
-            )["metadata"]
-        except ConcurrentCommitError as exc:
-            last = exc
-            continue
-    raise StorageError(
-        f"metadata update on {path!r} kept losing the manifest CAS; "
-        f"retry when the item is quiescent"
-    ) from last
+    if man is not None:
+        return man["metadata"]
+    return write_metadata(path, update_fn(dict(read_metadata(path) or {})))

@@ -256,6 +256,42 @@ def test_schema_evolution_append_retries_lost_commit(
     assert got["extra"].isna().sum() == 5
 
 
+def test_enable_schema_evolution_keeps_concurrent_append(
+    test_collection, monkeypatch
+):
+    """enable_schema_evolution is a metadata-only commit through the
+    manifest CAS: an append landing between its manifest read and its
+    install forces a retry against the fresh file list, so the
+    appended row stays live instead of being dropped by a pointer
+    computed from the stale one."""
+    from pystore_spark import utils
+
+    c = test_collection
+    idx = pd.date_range("2024-01-01", periods=4, freq="D")
+    c.write("evo", pd.DataFrame({"v": [1.0, 2.0, 3.0, 4.0]}, index=idx))
+    other = pd.Timestamp("2024-02-01")
+
+    orig = utils.write_manifest
+    fired = {}
+
+    def hooked(*args, **kwargs):
+        # first manifest install of THIS call: land a concurrent append
+        if "x" not in fired:
+            fired["x"] = True
+            c.append("evo", pd.DataFrame({"v": [9.0]}, index=[other]))
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(utils, "write_manifest", hooked)
+    c.enable_schema_evolution("evo")
+    monkeypatch.setattr(utils, "write_manifest", orig)
+    assert fired, "premise: the hook must land the concurrent append"
+    got = c.item("evo").to_pandas()
+    assert set(got.index) == set(idx) | {other}
+    assert got.loc[other, "v"] == 9.0
+    meta = c.get_item_metadata("evo", use_cache=False)
+    assert meta["_schema_evolution"]["enabled"] is True
+
+
 def _count_jobs(spark, fn) -> int:
     """Spark jobs ``fn()`` launches from this thread."""
     import uuid
@@ -298,3 +334,39 @@ def test_spark_append_job_budget(spark, test_collection, spark_path_only):
     assert len(c.item("t").to_pandas()) == 57 + 5
     assert len(c.item("s").to_pandas()) == 25
     assert (n_time, n_size) == (8, 3)
+
+
+def test_whole_item_append_detects_concurrent_commit(test_collection):
+    """The size-layout (whole-item rewrite) Spark append path carries
+    the observed-state guard too: a commit landing between this
+    append's read and its commit triggers a retry that re-merges
+    against fresh state — no rows vanish (code-review finding on the
+    third append path)."""
+    from pystore_spark import config
+
+    c = test_collection
+    docs = pd.DataFrame({"k": range(10), "v": [f"v{i}" for i in range(10)]})
+    c.write("flat", docs, index_col="k")
+
+    orig = c._write_df
+    fired = {}
+
+    def hooked(df, path, plan):
+        # first staging write of THIS append: land a concurrent append
+        if "x" not in fired:
+            fired["x"] = True
+            c.append("flat", pd.DataFrame({"k": [100], "v": ["other"]}))
+        return orig(df, path, plan)
+
+    old = config.DRIVER_PATH_MAX_BYTES
+    config.DRIVER_PATH_MAX_BYTES = 0  # force the Spark path
+    try:
+        c._write_df = hooked
+        c.append("flat", pd.DataFrame({"k": [200], "v": ["mine"]}))
+    finally:
+        c._write_df = orig
+        config.DRIVER_PATH_MAX_BYTES = old
+    got = c.item("flat").to_pandas()
+    assert set(got.index) == set(range(10)) | {100, 200}, (
+        "the concurrent append's row must survive this append's commit"
+    )

@@ -772,3 +772,23 @@ def test_append_dedup_keep_all_into_bucketed_target(corpus, spark):
     out = c.item("bcorpus").data
     assert "_ord_input" not in out.columns
     assert out.filter("doc_id = 901").count() == 1
+
+
+def test_append_dedup_sugar_threaded(test_collection):
+    c = test_collection
+    docs = pd.DataFrame({
+        "doc_id": range(4),
+        "text": [
+            "alpha beta gamma delta epsilon zeta " + f"tail {i} " * 5
+            for i in range(4)
+        ],
+    })
+    c.write("tcorp", docs, index_col="doc_id")
+    c.build_dedup_index("tcidx", "tcorp")
+    inc = pd.DataFrame({
+        "doc_id": [50],
+        "text": ["wholly new narrative about shuffle partitions"],
+    })
+    assert c.append("tcorp", inc, dedup_index="tcidx", threaded=True) is None
+    c.wait_for_tasks()
+    assert c.item("tcorp").data.count() == 5

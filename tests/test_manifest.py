@@ -456,3 +456,222 @@ def test_concurrent_create_same_item_loses_visibly(test_collection):
     man = utils.read_manifest(c._item_path("same_item"))
     assert man["version"] == 1
     assert c.item("same_item").data.count() == 50
+
+
+# ---------------------------------------------------------------------------
+# metadata-only commits: one retry rule, one manifest CAS
+# ---------------------------------------------------------------------------
+def _site_frame(n, start="2023-01-01"):
+    f = _frame(n, start=start, freq="D")
+    f["s"] = [f"id-{i}" for i in range(n)]
+    return f
+
+
+# every public call that commits through utils.commit_manifest_cas
+COMMIT_SITES = {
+    "restore": lambda c: c.restore("cs", 1),
+    "add_constraint": lambda c: c.add_constraint("cs", "pos", "v >= 0"),
+    "drop_constraint": lambda c: c.drop_constraint("cs", "old"),
+    "analyze": lambda c: c.analyze("cs"),
+    "analyze_incremental": lambda c: c.analyze_incremental("cs"),
+    "set_zonemap": lambda c: c.set_zonemap("cs", ["v"]),
+    "set_bloom": lambda c: c.set_bloom("cs", ["s"]),
+    "enable_schema_evolution": lambda c: c.enable_schema_evolution("cs"),
+}
+
+
+def _commit_site_item(c):
+    """A time-partitioned item at version 3: write, append (so restore
+    has a version to roll back to), and a constraint to drop."""
+    c.write("cs", _site_frame(90))  # three monthly buckets
+    c.append("cs", _site_frame(5, start="2023-04-01"))
+    c.add_constraint("cs", "old", "v > -1")
+    return c._item_path("cs")
+
+
+@pytest.mark.parametrize("site", sorted(COMMIT_SITES))
+def test_commit_site_raises_concurrent_commit_error_on_exhaustion(
+    test_collection, monkeypatch, site
+):
+    """A metadata-only commit that loses the manifest CAS on every
+    attempt raises ConcurrentCommitError — never a plain StorageError,
+    never a silent return with nothing saved — and installs nothing."""
+    from pystore_spark.exceptions import ConcurrentCommitError
+
+    c = test_collection
+    item_path = _commit_site_item(c)
+    before = utils.read_manifest(item_path)["version"]
+    calls = []
+
+    def always_lose(*args, **kwargs):
+        calls.append(kwargs.get("if_match"))
+        raise ConcurrentCommitError("lost the race (injected)")
+
+    monkeypatch.setattr(utils, "write_manifest", always_lose)
+    with pytest.raises(ConcurrentCommitError):
+        COMMIT_SITES[site](c)
+    monkeypatch.undo()
+    assert calls and all(etag is not None for etag in calls), (
+        "every install must be a conditional put"
+    )
+    assert utils.read_manifest(item_path)["version"] == before
+
+
+@pytest.mark.parametrize("site", sorted(COMMIT_SITES))
+def test_commit_site_keeps_concurrent_append_on_lost_race(
+    test_collection, monkeypatch, site
+):
+    """One concurrent append lands at the site's first manifest CAS:
+    the retry re-reads the fresh manifest, so the appended rows and
+    the site's own effect both survive."""
+    c = test_collection
+    item_path = _commit_site_item(c)
+    v_scan = utils.read_manifest(item_path)["version"]
+    target_files = set(utils.read_version_manifest(item_path, 1)["files"])
+    late = _site_frame(1, start="2023-04-15")
+    late["v"] = 500.0
+
+    orig = utils.write_manifest
+    fired = {}
+
+    def hooked(*args, **kwargs):
+        if "x" not in fired:
+            fired["x"] = True
+            c.append("cs", late)
+            fired["v_append"] = utils.read_manifest(item_path)["version"]
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(utils, "write_manifest", hooked)
+    out = COMMIT_SITES[site](c)
+    monkeypatch.undo()
+    assert fired, "premise: the hook must land the concurrent append"
+    c.clear_metadata_cache("cs")
+    man = utils.read_manifest(item_path)
+    meta = man["metadata"]
+    assert man["version"] == fired["v_append"] + 1
+
+    if site == "restore":
+        # restore retires the append from the live set on purpose; the
+        # append stays a committed version that time travel reads
+        assert set(man["files"]) == target_files
+        hist = c.item("cs", version=fired["v_append"]).to_pandas()
+        assert hist.loc[late.index[0], "v"] == 500.0
+        return
+    got = c.item("cs").to_pandas()
+    assert got.loc[late.index[0], "v"] == 500.0
+    assert len(got) == 96
+    if site == "add_constraint":
+        assert meta["_constraints"] == {"old": "v > -1", "pos": "v >= 0"}
+    elif site == "drop_constraint":
+        assert meta["_constraints"] == {}
+    elif site in ("analyze", "analyze_incremental"):
+        # as_of_version is the version the scan covered, not the
+        # concurrent append's
+        assert meta["_column_stats"]["as_of_version"] == v_scan
+        assert out["n_rows"] == 95
+    elif site == "set_zonemap":
+        assert meta["_zonemap_columns"] == ["v"]
+        assert set(man["stats"]) == set(man["files"])
+    elif site == "set_bloom":
+        assert meta["_bloom_columns"] == ["s"]
+        assert out["n_files"] == len(man["files"])
+    else:
+        assert meta["_schema_evolution"]["enabled"] is True
+
+
+def test_commit_retry_and_manifest_cas_live_in_utils():
+    """Spark-free guard on the commit rule: the lost-race retry loop
+    lives only in ``utils.retry_commit``, and conditional manifest
+    installs only in ``utils.commit_manifest_cas`` plus the commits it
+    cannot express (staged data commits, must-not-exist clones, and
+    the GC sweep that gives up on a lost race)."""
+    import ast
+
+    import pystore_spark
+
+    root = Path(pystore_spark.__file__).parent
+    cas_homes = {
+        ("utils.py", "commit_manifest_cas"),
+        ("collection.py", "_commit_staged"),
+        ("collection.py", "clone_item"),
+        ("manifest.py", "gc_item"),
+    }
+
+    def _name(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    def catches_lost_race(loop):
+        return any(
+            isinstance(h, ast.ExceptHandler)
+            and h.type is not None
+            and any(
+                _name(n) == "ConcurrentCommitError"
+                for n in ast.walk(h.type)
+            )
+            for h in ast.walk(loop)
+        )
+
+    loops, puts = [], []
+
+    def visit(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = scope + (child.name,)
+            where = f"{rel}:{getattr(child, 'lineno', '?')} {inner}"
+            if (
+                isinstance(child, ast.For)
+                and isinstance(child.iter, ast.Call)
+                and _name(child.iter.func) == "range"
+                and catches_lost_race(child)
+                and (rel, scope[-1:]) != ("utils.py", ("retry_commit",))
+            ):
+                loops.append(where)
+            if (
+                isinstance(child, ast.Call)
+                and _name(child.func) == "write_manifest"
+                and any(k.arg == "if_match" for k in child.keywords)
+                and not any((rel, fn) in cas_homes for fn in scope)
+            ):
+                puts.append(where)
+            visit(child, rel, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        visit(ast.parse(path.read_text()), rel, ())
+    assert not loops, f"hand-rolled commit retry loops: {loops}"
+    assert not puts, f"manifest CAS outside commit_manifest_cas: {puts}"
+
+
+# ---------------------------------------------------------------------------
+# corrupt manifest → history recovery, not directory-listing resurrection
+# ---------------------------------------------------------------------------
+def test_corrupt_manifest_recovers_from_history(test_collection):
+    c = test_collection
+    c.write("cm", _frame(500))
+    c.append("cm", _frame(100, start="2023-01-02"))
+    item_path = c._item_path("cm")
+    good = utils.read_manifest(item_path)
+    live = set(good["files"])
+    assert good.get("stale"), "premise: append must retire old files"
+
+    # plant an orphan that a directory-listing rebuild would resurrect
+    (item_path / "zz-staged-orphan.parquet").write_bytes(b"not parquet")
+    # tear the pointer
+    (item_path / utils.MANIFEST_FILE).write_bytes(b"{torn-json")
+
+    man, etag = utils.read_manifest_versioned(item_path)
+    assert etag is not None
+    assert man is not None, "history recovery must engage"
+    assert set(man["files"]) == live, (
+        "recovered live set must equal the last durable commit — not a "
+        "directory listing that resurrects stale/staged files"
+    )
+
+
+def test_corrupt_manifest_without_history_falls_back(tmp_path):
+    p = tmp_path / "item"
+    p.mkdir()
+    (p / utils.MANIFEST_FILE).write_bytes(b"{torn")
+    man, etag = utils.read_manifest_versioned(p)
+    assert man is None and etag is not None

@@ -3,30 +3,17 @@
 * order_col determinism warning on shuffled append input (merge.py)
 * widen_parallelism surfaces a debug log instead of silence when the
   Catalyst size estimate is unavailable (functions/text.py)
-* corrupt-manifest recovery prefers _versions/ history over the
-  resurrect-everything directory listing (utils.py)
-* _version_as_of tie-break: metadata-only (stamp=False) commits never
-  make an as_of read report a version committed after ts (item.py)
 * dedup_chunks passes zero-token documents through (pipeline.py)
 """
 
 from __future__ import annotations
 
-import json
 import logging
 
-import numpy as np
 import pandas as pd
 import pytest
 
 from pystore_spark import merge, utils
-
-
-def _frame(n, start="2023-01-01", freq="min"):
-    return pd.DataFrame(
-        {"v": np.arange(n, dtype="float64")},
-        index=pd.date_range(start, periods=n, freq=freq),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -95,71 +82,6 @@ def test_widen_parallelism_logs_when_estimate_missing(
 
 
 # ---------------------------------------------------------------------------
-# corrupt manifest → history recovery, not directory-listing resurrection
-# ---------------------------------------------------------------------------
-def test_corrupt_manifest_recovers_from_history(test_collection):
-    c = test_collection
-    c.write("cm", _frame(500))
-    c.append("cm", _frame(100, start="2023-01-02"))
-    item_path = c._item_path("cm")
-    good = utils.read_manifest(item_path)
-    live = set(good["files"])
-    assert good.get("stale"), "premise: append must retire old files"
-
-    # plant an orphan that a directory-listing rebuild would resurrect
-    (item_path / "zz-staged-orphan.parquet").write_bytes(b"not parquet")
-    # tear the pointer
-    (item_path / utils.MANIFEST_FILE).write_bytes(b"{torn-json")
-
-    man, etag = utils.read_manifest_versioned(item_path)
-    assert etag is not None
-    assert man is not None, "history recovery must engage"
-    assert set(man["files"]) == live, (
-        "recovered live set must equal the last durable commit — not a "
-        "directory listing that resurrects stale/staged files"
-    )
-
-
-def test_corrupt_manifest_without_history_falls_back(tmp_path):
-    p = tmp_path / "item"
-    p.mkdir()
-    (p / utils.MANIFEST_FILE).write_bytes(b"{torn")
-    man, etag = utils.read_manifest_versioned(p)
-    assert man is None and etag is not None
-
-
-# ---------------------------------------------------------------------------
-# _version_as_of: stamp=False commits never shadow the stamped commit
-# ---------------------------------------------------------------------------
-def test_as_of_tiebreak_smallest_version_for_shared_stamp(test_collection):
-    c = test_collection
-    c.write("tv", _frame(200))
-    item_path = c._item_path("tv")
-    v1 = utils.read_manifest(item_path)["version"]
-
-    # metadata-only commit (stamp=False) — inherits v1's _updated
-    man = utils.read_manifest(item_path)
-    utils.write_manifest(
-        item_path,
-        man["files"],
-        {**man["metadata"], "_note": "gc"},
-        stale=man.get("stale"),
-        version=man["version"] + 1,
-        stamp=False,
-        sizes=man.get("sizes"),
-    )
-    stamp = man["metadata"]["_updated"]
-
-    from pystore_spark.item import _version_as_of
-
-    got = _version_as_of(item_path, stamp)
-    assert got == v1, (
-        f"as_of {stamp!r} resolved to v{got}, a commit that postdates "
-        f"the stamp owner v{v1}"
-    )
-
-
-# ---------------------------------------------------------------------------
 # dedup_chunks: zero-token documents pass through
 # ---------------------------------------------------------------------------
 def test_dedup_chunks_keeps_tokenless_documents(spark):
@@ -184,42 +106,6 @@ def test_dedup_chunks_keeps_tokenless_documents(spark):
     assert 3 in kept
     assert kept.isdisjoint(set()) or not ({1, 2} <= kept), (
         "boilerplate duplicates should be dropped"
-    )
-
-
-def test_whole_item_append_detects_concurrent_commit(test_collection):
-    """The size-layout (whole-item rewrite) Spark append path carries
-    the observed-state guard too: a commit landing between this
-    append's read and its commit triggers a retry that re-merges
-    against fresh state — no rows vanish (code-review finding on the
-    third append path)."""
-    from pystore_spark import config
-
-    c = test_collection
-    docs = pd.DataFrame({"k": range(10), "v": [f"v{i}" for i in range(10)]})
-    c.write("flat", docs, index_col="k")
-
-    orig = c._write_df
-    fired = {}
-
-    def hooked(df, path, plan):
-        # first staging write of THIS append: land a concurrent append
-        if "x" not in fired:
-            fired["x"] = True
-            c.append("flat", pd.DataFrame({"k": [100], "v": ["other"]}))
-        return orig(df, path, plan)
-
-    old = config.DRIVER_PATH_MAX_BYTES
-    config.DRIVER_PATH_MAX_BYTES = 0  # force the Spark path
-    try:
-        c._write_df = hooked
-        c.append("flat", pd.DataFrame({"k": [200], "v": ["mine"]}))
-    finally:
-        c._write_df = orig
-        config.DRIVER_PATH_MAX_BYTES = old
-    got = c.item("flat").to_pandas()
-    assert set(got.index) == set(range(10)) | {100, 200}, (
-        "the concurrent append's row must survive this append's commit"
     )
 
 
@@ -316,26 +202,6 @@ def test_index_col_collision_preserved_not_crashed():
     dt_cols = [c for c in flat.columns
                if pd.api.types.is_datetime64_any_dtype(flat[c])]
     assert dt_cols, "the unnamed DatetimeIndex must survive as a column"
-
-
-def test_append_dedup_sugar_threaded(test_collection):
-    c = test_collection
-    docs = pd.DataFrame({
-        "doc_id": range(4),
-        "text": [
-            "alpha beta gamma delta epsilon zeta " + f"tail {i} " * 5
-            for i in range(4)
-        ],
-    })
-    c.write("tcorp", docs, index_col="doc_id")
-    c.build_dedup_index("tcidx", "tcorp")
-    inc = pd.DataFrame({
-        "doc_id": [50],
-        "text": ["wholly new narrative about shuffle partitions"],
-    })
-    assert c.append("tcorp", inc, dedup_index="tcidx", threaded=True) is None
-    c.wait_for_tasks()
-    assert c.item("tcorp").data.count() == 5
 
 
 def test_sorted_input_gets_tie_warning_not_silence(spark):

@@ -784,3 +784,34 @@ class TestCloneBloomRace:
             "raceb", filters=[("doc_id", "==", 7)]
         ).to_pandas()
         assert list(got.index) == [7]  # doc_id is the pandas index
+
+
+# ---------------------------------------------------------------------------
+# _version_as_of: stamp=False commits never shadow the stamped commit
+# ---------------------------------------------------------------------------
+def test_as_of_tiebreak_smallest_version_for_shared_stamp(test_collection):
+    c = test_collection
+    c.write("tv", _frame(200))
+    item_path = c._item_path("tv")
+    v1 = utils.read_manifest(item_path)["version"]
+
+    # metadata-only commit (stamp=False) — inherits v1's _updated
+    man = utils.read_manifest(item_path)
+    utils.write_manifest(
+        item_path,
+        man["files"],
+        {**man["metadata"], "_note": "gc"},
+        stale=man.get("stale"),
+        version=man["version"] + 1,
+        stamp=False,
+        sizes=man.get("sizes"),
+    )
+    stamp = man["metadata"]["_updated"]
+
+    from pystore_spark.item import _version_as_of
+
+    got = _version_as_of(item_path, stamp)
+    assert got == v1, (
+        f"as_of {stamp!r} resolved to v{got}, a commit that postdates "
+        f"the stamp owner v{v1}"
+    )
